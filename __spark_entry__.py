@@ -5030,8 +5030,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # hash row before this round (the 36 at positions 50-85 of the r04
     # dict PLUS the 8 ANN/multimodal/simhash entries whose only driver
     # row was r01 err=no_oracle — VERDICT r04 finding 1). Slots 45-50 =
-    # the new round-5 contract queries. After the r05 run every registry
-    # entry has at least one driver-green row.
+    # the new round-5 contract queries. After the r05 run 161 of the 167
+    # entries have a driver-green row; the six post-window round-5
+    # entries have mirror evidence only.
     return {
         "bgp_stats_ordered_query": _q_bgp_stats_ordered,
         "sparql_base_resolution": _q_sparql_base,

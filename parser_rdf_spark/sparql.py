@@ -37,11 +37,13 @@ Supported subset (everything the underlying compiler can plan):
   ``BIND(expr AS ?v)``, ``VALUES``,
   ``{ … } UNION { … }`` (anywhere in a group — nested unions, several
   union expressions per group, and unions mixed with sibling patterns
-  all compile; the pieces natural-join on shared variables and group
-  FILTERs run over the joined relation), sub-SELECT (``{ SELECT … }``
-  executed recursively and natural-joined with the enclosing group on
-  its projected variables, in every query form and inside UNION
-  branches; outer FILTERs may reference sub-projected
+  all compile; the pieces join by SPARQL compatibility on shared
+  variables, §18.3 — a variable some piece may leave unbound matches
+  anything there — and group FILTERs run over the joined relation),
+  sub-SELECT (``{ SELECT … }`` executed recursively and
+  compatible-joined with the enclosing group on its projected
+  variables, in every query form and inside UNION branches; outer
+  FILTERs may reference sub-projected
   variables), ``FROM <g>`` / ``FROM NAMED <g>`` dataset clauses over a
   quads relation (the default graph becomes the set-union of the FROM
   graphs; the named-graph set becomes exactly the FROM NAMED list),
@@ -72,10 +74,7 @@ endpoints implementation-defined). The one out-of-scope construct
 raises :class:`SparqlError` naming it (never silently mis-answer):
 HTTP federation — no network execution; register the relation instead. Nested
 GRAPH follows the spec's algebra (the inner term re-selects the active
-graph, §13.3) with one documented deviation: a variable graph term
-binds only from patterns DIRECTLY inside it — an outer ``GRAPH ?g``
-wrapping nothing but an inner constant GRAPH leaves ``?g`` unbound
-rather than ranging over every named graph.
+graph, §13.3); a ``GRAPH ?g`` that wraps no pattern of its own raises.
 
 Term semantics match the engine's verbatim string matching: the triples
 relation stores terms as strings (:func:`.bgp.triples_spo` projects the
@@ -107,7 +106,8 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .bgp import apply_negation, bgp_ask, bgp_query, seq_path
+from .bgp import (_pattern_vars, apply_negation, bgp_query,
+                  construct_from_solutions, predicate_stats_map, seq_path)
 from .iri import is_absolute_iri, resolve_iri
 
 RDF_TYPE_IRI = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
@@ -601,14 +601,14 @@ class _Parser:
                 self._next()
                 if self._at_kw("select"):
                     # sub-SELECT: a full SELECT query as a group element;
-                    # its solution relation natural-joins the enclosing
-                    # group on the shared (projected) variables
+                    # its solution relation joins the enclosing group on
+                    # the shared (projected) variables
                     self._next()
                     # plain_vars is scoped per SELECT: the subquery sees
                     # none of the enclosing scope's markings (SPARQL
                     # subqueries only see their own bindings), and only
-                    # its PROJECTED plain vars — the ones its natural
-                    # join exposes — propagate back out
+                    # its PROJECTED plain vars — the ones its join
+                    # exposes — propagate back out
                     outer_plain = self.plain_vars
                     self.plain_vars = set()
                     sub = _parse_select(self, subquery=True)
@@ -715,7 +715,14 @@ class _Parser:
                 if sub.get("graph_vars"):
                     spec.setdefault("graph_vars", set()).update(
                         sub["graph_vars"])
-                if g_term.startswith("?") and tagged:
+                if g_term.startswith("?"):
+                    if not tagged:
+                        # the variable would have to range over every
+                        # named graph with nothing to bind it from
+                        raise SparqlError(
+                            f"GRAPH {g_term} needs a triple pattern of its "
+                            "own; it binds only from patterns directly "
+                            "inside it")
                     spec.setdefault("graph_vars", set()).add(g_term[1:])
                 continue
             if self._eat_kw("service"):
@@ -1636,47 +1643,6 @@ def _order_cols(df: DataFrame, order_by: list, term_mode: bool) -> list:
     return cols
 
 
-def _exec_kwargs(spec: dict) -> dict:
-    return {k: v for k, v in spec.items()
-            if k in ("patterns", "optional", "filters", "values", "bind",
-                     "exists", "not_exists", "minus", "stats")}
-
-
-def _inject_services(spec: dict, registry: dict) -> None:
-    """Attach the SERVICE endpoint registry (bare-IRI → DataFrame) to
-    every group of the parsed query so :func:`_group_solutions` can
-    resolve ``SERVICE <e> { … }`` wherever it appears. In-place; the
-    registry is shared, read-only."""
-    spec["services_map"] = registry
-    for branches in spec.get("unions", ()):
-        for b in branches:
-            _inject_services(b, registry)
-    for s in spec.get("subselects", ()):
-        _inject_services(s, registry)
-    for svc in spec.get("services", ()):
-        _inject_services(svc[1], registry)
-
-
-def _is_complex_group(spec: dict) -> bool:
-    """True when the group needs :func:`_group_solutions` (pieces beyond
-    one BGP: UNION expressions, sub-SELECTs, SERVICE groups)."""
-    return bool(spec.get("unions") or spec.get("subselects")
-                or spec.get("services"))
-
-
-def _inject_stats(spec: dict, smap: dict) -> None:
-    """Attach the predicate-statistics map to every pattern group of the
-    parsed query (the main group, each UNION branch, each sub-SELECT) so
-    every :func:`.bgp.bgp_query` call under this query plans with
-    cost-based pattern ordering. In-place; the map is shared, read-only."""
-    spec["stats"] = smap
-    for branches in spec.get("unions", ()):
-        for b in branches:
-            _inject_stats(b, smap)
-    for s in spec.get("subselects", ()):
-        _inject_stats(s, smap)
-
-
 def _apply_graph_semantics(spec: dict, has_graph_col: bool) -> dict:
     """SPARQL dataset semantics over the relation shape: 4-term (GRAPH)
     patterns need a quads relation; over a quads relation, un-GRAPHed
@@ -1768,121 +1734,147 @@ def _apply_dataset_clauses(quads: DataFrame, spec: dict) -> DataFrame:
     return out
 
 
-def _group_solutions(triples: DataFrame, spec: dict, dedup: bool) -> DataFrame:
-    """Solution relation of one group graph pattern — the general
-    executor behind every query form whenever the group is more than a
-    single BGP: UNION expressions (nested to any depth), sub-SELECTs
-    (including inside UNION branches), and their combination with
-    sibling triple patterns.
+def _union_all(pieces: list) -> tuple[DataFrame, set[str]]:
+    """UNION of (relation, certainly-bound variables) pieces: plan-level
+    concatenation by column name (a variable missing from a branch is
+    NULL there). A variable is certain in the union only if every
+    branch binds it for certain."""
+    df, certain = pieces[0]
+    for d, c in pieces[1:]:
+        df = df.unionByName(d, allowMissingColumns=True)
+        certain = certain & c
+    return df, certain
+
+
+def _compatible_join(left: DataFrame, lcertain: set, right: DataFrame,
+                     rcertain: set) -> tuple[DataFrame, set[str]]:
+    """Join two solution relations by SPARQL compatibility (§18.3): two
+    solutions join when each shared variable is equal on both sides OR
+    unbound on either, and the merged solution takes the bound value.
+    A shared variable certainly bound on both sides stays a plain
+    equi-join key (hash / sort-merge joinable, the plans of a BGP); one
+    that either side may leave unbound joins on ``l IS NULL OR r IS
+    NULL OR l = r`` and is coalesced. With no shared variable the join
+    is a cross product. Returns the relation and the variables it binds
+    for certain: those either side binds for certain."""
+    lcols, rcols = set(left.columns), set(right.columns)
+    shared = sorted(lcols & rcols)
+    loose = set(shared) - (lcertain & rcertain)
+    certain = lcertain | rcertain
+    if not loose:
+        return (left.join(right, on=shared, how="inner") if shared
+                else left.crossJoin(right)), certain
+    rest = [c for c in right.columns if c not in lcols]
+    right = right.select(*rest, *[F.col(v).alias(f"__r_{v}") for v in shared])
+    cond = None
+    for v in shared:
+        lc, rc = F.col(v), F.col(f"__r_{v}")
+        eq = (lc.isNull() | rc.isNull() | (lc == rc)) if v in loose else lc == rc
+        cond = eq if cond is None else cond & eq
+    df = left.join(right, cond, "inner").select(
+        *[F.coalesce(F.col(v), F.col(f"__r_{v}")).alias(v) if v in loose
+          else F.col(v) for v in shared],
+        *[c for c in left.columns if c not in rcols], *rest)
+    return df, certain
+
+
+def _group_solutions(triples: DataFrame, spec: dict, dedup: bool,
+                     stats: dict | None = None,
+                     services: dict | None = None) -> tuple[DataFrame, set[str]]:
+    """Solution relation of one group graph pattern — the one evaluator
+    behind every query form — and the set of variables it binds in
+    every solution. Every other column may be unbound somewhere:
+    OPTIONAL variables, BIND targets, VALUES columns with UNDEF,
+    variables some UNION branch or sub-SELECT may leave unbound.
 
     Algebra (spec §18.2): the group's own patterns compile through one
     :func:`.bgp.bgp_query` (OPTIONAL / BIND / VALUES attach there —
-    they scope to the sibling patterns), each UNION expression becomes
-    the plan-level concatenation of its recursively-evaluated branch
-    solutions (``unionByName``; a variable unbound in some branch is
-    NULL there, per SPARQL), each sub-SELECT runs recursively, and the
-    pieces natural-join on their shared variables (Join is commutative
-    and associative over multisets, so sibling-patterns-first is a
-    valid order). Group-level FILTERs run after the joins so they may
-    reference variables bound by any piece; Catalyst pushes each
-    conjunct back to the earliest plan node that binds its columns, so
-    this costs nothing at scale. EXISTS / NOT EXISTS / MINUS are
-    likewise group-scoped: lifted out of the sibling BGP and applied as
-    semi/anti joins against the JOINED relation, so they see variables
-    bound by UNION branches and sub-SELECTs too."""
-    union_dfs = []
+    they scope to the sibling patterns), each sub-SELECT and SERVICE
+    body runs recursively, each UNION expression becomes the plan-level
+    concatenation of its recursively-evaluated branch solutions, and
+    the pieces join by compatibility (:func:`_compatible_join`; Join is
+    commutative and associative over multisets, so
+    sibling-patterns-first is a valid order). A group with no piece is
+    the single empty solution. Group FILTERs run after the joins so
+    they may reference variables bound by any piece; Catalyst pushes
+    each conjunct back to the earliest plan node that binds its
+    columns, so this costs nothing at scale. EXISTS / NOT EXISTS /
+    MINUS are likewise group-scoped: semi/anti joins against the JOINED
+    relation, so they see variables bound by every piece.
+
+    ``stats`` (a :func:`.bgp.predicate_stats_map` dict) orders the
+    pattern joins of every group below this one except SERVICE bodies,
+    which run against another relation. ``services`` maps bare endpoint
+    IRIs to their registered relations."""
+    services = services or {}
+    pieces = []
+    patterns = spec.get("patterns")
+    clauses = {k: spec[k] for k in ("optional", "values", "bind") if spec.get(k)}
+    if patterns:
+        df = bgp_query(triples, patterns, dedup=dedup, stats=stats, **clauses)
+        names, rows = spec.get("values") or ([], [])
+        pieces.append((df, set().union(*map(_pattern_vars, patterns)) | {
+            n[1:] for i, n in enumerate(names)
+            if all(r[i] is not None for r in rows)}))
+    elif clauses:
+        raise SparqlError(
+            "a group without triple patterns supports FILTER, EXISTS/NOT "
+            "EXISTS/MINUS, UNION, sub-SELECT and SERVICE only")
+    pieces += [_run_select(triples, s, dedup, stats, services)
+               for s in spec.get("subselects", ())]
     for branches in spec.get("unions", ()):
-        acc = None
-        for b in branches:
-            sols = _group_solutions(triples, b, dedup)
-            acc = sols if acc is None else acc.unionByName(
-                sols, allowMissingColumns=True)
-        union_dfs.append(acc)
-    subs = [_run_select(triples, dict(s), dedup)
-            for s in spec.get("subselects", ())]
-    svc_dfs = []
+        pieces.append(_union_all([
+            _group_solutions(triples, b, dedup, stats, services)
+            for b in branches]))
     for endpoint, sub, silent, svc_term_mode in spec.get("services", ()):
-        registry = spec.get("services_map") or {}
-
-        def _eval_service(rel: DataFrame) -> DataFrame:
-            # the SERVICE body evaluates against the REGISTERED
-            # relation: graph semantics follow ITS shape, and its own
-            # SERVICE groups resolve through the same registry
-            sub2 = _apply_graph_semantics(dict(sub), "graph" in rel.columns)
-            sub2["services_map"] = registry
-            return _group_solutions(rel, sub2, dedup)
-
         if endpoint.startswith("?"):
             # variable endpoint: one branch per registered endpoint,
             # the variable bound to its IRI (relation-native rendering)
-            vname = endpoint[1:]
-            branches = [
-                _eval_service(rel).withColumn(
-                    vname, F.lit(f"<{key}>" if svc_term_mode else key))
-                for key, rel in sorted(registry.items())
-            ]
-            if not branches:
-                if silent:
-                    continue
+            keys = sorted(services)
+            if not keys and not silent:
                 raise SparqlError(
                     "SERVICE with a variable endpoint needs registered "
                     "endpoints — pass services={'iri': DataFrame} to "
                     "sparql_query")
-            acc2 = branches[0]
-            for b in branches[1:]:
-                acc2 = acc2.unionByName(b, allowMissingColumns=True)
-            svc_dfs.append(acc2)
-            continue
-        key = endpoint[1:-1] if endpoint.startswith("<") else endpoint
-        rel = registry.get(key)
-        if rel is None:
-            if silent:
+        else:
+            keys = [endpoint[1:-1] if endpoint.startswith("<") else endpoint]
+            if keys[0] not in services:
+                if not silent:
+                    raise SparqlError(
+                        f"SERVICE endpoint <{keys[0]}> is not registered — "
+                        "pass services={'iri': DataFrame} to sparql_query")
                 # SERVICE SILENT on an unreachable endpoint yields the
                 # single empty solution mapping (spec §18.8) — the join
-                # identity, so simply contribute nothing
-                continue
-            raise SparqlError(
-                f"SERVICE endpoint <{key}> is not registered — pass "
-                "services={'iri': DataFrame} to sparql_query")
-        svc_dfs.append(_eval_service(rel))
-    if not union_dfs and not subs and not svc_dfs:
-        kwargs = _exec_kwargs(spec)
-        patterns = kwargs.pop("patterns")
-        if not patterns and spec.get("services"):
-            # every SERVICE was SILENT-skipped and nothing else binds:
-            # the group is the single empty solution mapping (§18.8)
-            return triples.sparkSession.range(1).drop("id")
-        return bgp_query(triples, patterns, dedup=dedup, **kwargs)
-    kwargs = _exec_kwargs(spec)
-    filters = kwargs.pop("filters", None)
-    # EXISTS/NOT EXISTS/MINUS are group-scoped (they are FILTERs /
-    # group elements, not BGP clauses): lift them out of the sibling
-    # BGP and apply them to the JOINED relation, so they see variables
-    # bound by UNION branches and sub-SELECTs too
-    negation = {k: kwargs.pop(k) for k in ("exists", "not_exists", "minus")
-                if kwargs.get(k)}
-    patterns = kwargs.pop("patterns")
-    if patterns:
-        df = bgp_query(triples, patterns, dedup=dedup, **kwargs)
-    elif any(kwargs.get(k) for k in ("optional", "values", "bind")):
-        raise SparqlError(
-            "a pattern-less group around UNION/sub-SELECT supports "
-            "FILTER and EXISTS/NOT EXISTS/MINUS only")
+                # identity, so the piece is simply left out
+                keys = []
+        branches = []
+        for key in keys:
+            # the SERVICE body evaluates against the REGISTERED
+            # relation: graph semantics follow ITS shape, and the outer
+            # relation's stats do not apply
+            rel = services[key]
+            sols, certain = _group_solutions(
+                rel, _apply_graph_semantics(sub, "graph" in rel.columns),
+                dedup, None, services)
+            if endpoint.startswith("?"):
+                sols = sols.withColumn(
+                    endpoint[1:], F.lit(f"<{key}>" if svc_term_mode else key))
+            branches.append((sols, certain))
+        if branches:
+            pieces.append(_union_all(branches))
+    if pieces:
+        df, certain = pieces[0]
+        for piece, piece_certain in pieces[1:]:
+            df, certain = _compatible_join(df, certain, piece, piece_certain)
     else:
-        df = None
-    for piece in subs + union_dfs + svc_dfs:
-        if df is None:
-            df = piece
-            continue
-        shared = sorted(set(df.columns) & set(piece.columns))
-        df = (df.join(piece, on=shared, how="inner") if shared
-              else df.crossJoin(piece))
-    for f in filters or []:
+        df, certain = triples.sparkSession.range(1).drop("id"), set()
+    for f in spec.get("filters", ()):
         df = df.filter(F.expr(f))
+    negation = {k: spec[k] for k in ("exists", "not_exists", "minus")
+                if spec.get(k)}
     if negation:
-        df = apply_negation(triples, df, dedup=dedup,
-                            stats=kwargs.get("stats"), **negation)
-    return df
+        df = apply_negation(triples, df, dedup=dedup, stats=stats, **negation)
+    return df, certain
 
 
 def sparql_query(triples: DataFrame, text: str, dedup: bool = True,
@@ -1919,73 +1911,47 @@ def sparql_query(triples: DataFrame, text: str, dedup: bool = True,
     another DataFrame — a second materialized table, another snapshot,
     a remote catalog read). Keys are endpoint IRIs (bare or
     ``<``-wrapped); the SERVICE body evaluates against the registered
-    relation (graph semantics follow ITS shape) and natural-joins the
-    enclosing group like any other piece. An UNregistered endpoint
-    raises unless the query says ``SERVICE SILENT``, which contributes
-    the single empty solution mapping per spec §18.8."""
+    relation (graph semantics follow ITS shape) and joins the enclosing
+    group like any other piece. An UNregistered endpoint raises unless
+    the query says ``SERVICE SILENT``, which contributes the single
+    empty solution mapping per spec §18.8."""
     spec = parse_sparql(text, term_mode=term_mode)
     form = spec.pop("form")
-    if services:
-        registry = {
-            (k[1:-1] if k.startswith("<") and k.endswith(">") else k): v
-            for k, v in services.items()}
-        _inject_services(spec, registry)
+    registry = {(k[1:-1] if k.startswith("<") and k.endswith(">") else k): v
+                for k, v in (services or {}).items()}
     if term_mode and "graph" in triples.columns:
         raise SparqlError(
             "term_mode expects the 3-column terms_spo relation "
             "(GRAPH/quads surfaces are not term-encoded)")
     triples = _apply_dataset_clauses(triples, spec)
     spec = _apply_graph_semantics(spec, "graph" in triples.columns)
+    smap = None
     if stats is not None:
-        from .bgp import predicate_stats_map
-
         smap = predicate_stats_map(stats)
         if term_mode:
             smap = {(k if k[:1] in ("<", "_", '"') else f"<{k}>"): v
                     for k, v in smap.items()}
-        _inject_stats(spec, smap)
-    if form == "ask":
-        if _is_complex_group(spec):
-            # ≥1 solution in the group relation; limit(1) on top still
-            # early-stops each branch scan
-            sols = _group_solutions(triples, spec, dedup).limit(1)
-            return sols.agg((F.count(F.lit(1)) > 0).alias("ask"))
-        kwargs = _exec_kwargs(spec)
-        patterns = kwargs.pop("patterns")
-        return bgp_ask(triples, patterns, dedup=dedup, **kwargs)
-    if form == "construct":
-        # the WHERE group binds with the FULL kwargs set (values / bind /
-        # exists / not_exists / minus included — a dropped FILTER NOT
-        # EXISTS would silently over-emit triples), then solution
-        # modifiers apply to the MATCH and the template instantiates the
-        # surviving solutions (spec §16.2). A UNION group instantiates
-        # the template per branch solution (NULL for a variable unbound
-        # in some branch drops that template row — construct emits only
-        # fully-ground triples).
-        from .bgp import construct_from_solutions
-
-        if _is_complex_group(spec):
-            sols = _group_solutions(triples, spec, dedup)
-        else:
-            kwargs = _exec_kwargs(spec)
-            patterns = kwargs.pop("patterns")
-            sols = bgp_query(triples, patterns, dedup=dedup, **kwargs)
-        order_by, limit = spec.get("order_by"), spec.get("limit")
-        if order_by:
-            sols = sols.orderBy(
-                *_order_cols(sols, order_by, spec.get("term_mode", False)))
-        if limit is not None:
-            sols = sols.limit(limit)
-        return construct_from_solutions(sols, spec["template"])
+    if form == "select":
+        return _run_select(triples, spec, dedup, smap, registry)[0]
     if form == "describe":
-        return _run_describe(triples, spec, dedup)
-    return _run_select(triples, spec, dedup)
+        return _run_describe(triples, spec, dedup, smap, registry)
+    sols = _group_solutions(triples, spec, dedup, smap, registry)[0]
+    if form == "ask":
+        # ≥1 solution in the group relation; limit(1) lets every scan
+        # stop at the first solution
+        return sols.limit(1).agg((F.count(F.lit(1)) > 0).alias("ask"))
+    # CONSTRUCT: solution modifiers apply to the MATCH, then the
+    # template instantiates the surviving solutions (spec §16.2); a
+    # template row with an unbound variable emits no triple
+    return construct_from_solutions(_order_slice(sols, spec), spec["template"])
 
 
-def _finish_select(df: DataFrame, select, distinct, aggregates, group_by,
-                   having) -> DataFrame:
-    """Aggregation + projection tail shared by every solution-relation
-    producer (plain group, UNION, subselect join)."""
+def _finish_select(df: DataFrame, spec: dict) -> DataFrame:
+    """Aggregation + projection tail of SELECT: GROUP BY / aggregates /
+    HAVING, then projection expressions, the SELECT list (``SELECT *``
+    hides internal variables — seq-path intermediates, query bnodes —
+    per SPARQL's bnode non-projection) and DISTINCT."""
+    aggregates, group_by = spec.get("aggregates"), spec.get("group_by")
     if aggregates:
         keys = group_by or []
         missing = [k for k in keys if k not in df.columns]
@@ -1993,85 +1959,49 @@ def _finish_select(df: DataFrame, select, distinct, aggregates, group_by,
             raise SparqlError(f"GROUP BY references unbound: {missing}")
         aggs = [F.expr(e).alias(n) for n, e in aggregates.items()]
         df = df.groupBy(*keys).agg(*aggs) if keys else df.agg(*aggs)
-        for h in having or []:
+        for h in spec.get("having") or []:
             df = df.filter(F.expr(h))
-        if select:
-            df = df.select(*select)
-        if distinct:
-            df = df.distinct()
-        return df
-    if group_by or having:
+    elif group_by or spec.get("having"):
         raise SparqlError("GROUP BY/HAVING require aggregates")
+    for name, expr in (spec.get("proj_exprs") or {}).items():
+        df = df.withColumn(name, F.expr(expr))
+    select = spec.get("select")
     if select:
+        missing = [v for v in select if v not in df.columns]
+        if missing:
+            raise SparqlError(f"SELECT references unbound variables: {missing}")
         df = df.select(*select)
-    if distinct:
-        df = df.distinct()
-    return df
-
-
-def _run_select(triples: DataFrame, spec: dict, dedup: bool) -> DataFrame:
-    spec = dict(spec)
-    proj_exprs = spec.pop("proj_exprs", None)
-    select = spec.pop("select", None)
-    distinct = spec.pop("distinct", False)
-    order_by = spec.pop("order_by", None)
-    limit = spec.pop("limit", None)
-    offset = spec.pop("offset", None)
-    aggregates = spec.pop("aggregates", None)
-    group_by = spec.pop("group_by", None)
-    having = spec.pop("having", None)
-    term_mode = spec.pop("term_mode", False)
-    # projection expressions run AFTER the solution relation (and any
-    # aggregate) is built, so the inner paths project nothing and the
-    # final select/distinct move to the tail
-    inner_select, inner_distinct = \
-        (None, False) if proj_exprs else (select, distinct)
-
-    if _is_complex_group(spec):
-        # the general group executor: sibling patterns ⋈ sub-SELECT
-        # solutions ⋈ UNION solutions (nested to any depth), group
-        # FILTERs after the joins; the aggregate/projection tail runs on
-        # the joined relation — the union is plan-level concatenation,
-        # an aggregate one hash agg on top
-        df = _group_solutions(triples, spec, dedup)
-        df = _finish_select(df, inner_select, inner_distinct, aggregates,
-                            group_by, having)
     else:
-        kwargs = _exec_kwargs(spec)
-        df = bgp_query(
-            triples,
-            kwargs.pop("patterns"),
-            select=inner_select,
-            distinct=inner_distinct,
-            aggregates=aggregates,
-            group_by=group_by,
-            having=having,
-            dedup=dedup,
-            **kwargs,
-        )
-    if proj_exprs:
-        for name, expr in proj_exprs.items():
-            df = df.withColumn(name, F.expr(expr))
-        if select:
-            df = df.select(*select)
-        if distinct:
-            df = df.distinct()
-    if select is None:
-        # SELECT *: internal variables (seq-path intermediates, query
-        # bnodes) are not projected, per SPARQL's bnode non-projection
-        hidden = [c for c in df.columns if c.startswith("__")]
-        if hidden:
-            df = df.drop(*hidden)
-    if order_by:
-        df = df.orderBy(*_order_cols(df, order_by, term_mode))
-    if offset:
-        df = df.offset(offset)
-    if limit is not None:
-        df = df.limit(limit)
+        df = df.drop(*[c for c in df.columns if c.startswith("__")])
+    return df.distinct() if spec.get("distinct") else df
+
+
+def _order_slice(df: DataFrame, spec: dict) -> DataFrame:
+    """ORDER BY, OFFSET and LIMIT over a solution sequence."""
+    if spec.get("order_by"):
+        df = df.orderBy(*_order_cols(df, spec["order_by"],
+                                     spec.get("term_mode", False)))
+    if spec.get("offset"):
+        df = df.offset(spec["offset"])
+    if spec.get("limit") is not None:
+        df = df.limit(spec["limit"])
     return df
 
 
-def _run_describe(triples: DataFrame, spec: dict, dedup: bool) -> DataFrame:
+def _run_select(triples: DataFrame, spec: dict, dedup: bool,
+                stats: dict | None = None,
+                services: dict | None = None) -> tuple[DataFrame, set[str]]:
+    """SELECT over one group: solutions, then :func:`_finish_select`,
+    then ORDER BY / OFFSET / LIMIT. Returns the relation and the
+    projected variables its group binds for certain; every other
+    column, aggregates and expressions included, may be unbound."""
+    sols, certain = _group_solutions(triples, spec, dedup, stats, services)
+    df = _order_slice(_finish_select(sols, spec), spec)
+    return df, certain & set(spec.get("select") or certain)
+
+
+def _run_describe(triples: DataFrame, spec: dict, dedup: bool,
+                  stats: dict | None, services: dict) -> DataFrame:
     """DESCRIBE: the (implementation-defined, per spec) description is
     every triple whose SUBJECT is in the resource set — constants plus
     every value the DESCRIBE variables take in the WHERE solutions. One
@@ -2084,17 +2014,12 @@ def _run_describe(triples: DataFrame, spec: dict, dedup: bool) -> DataFrame:
     if consts:
         parts.append(spark.createDataFrame([(c,) for c in consts], "r string"))
     if var_names:
-        if _is_complex_group(spec):
-            sols = _group_solutions(triples, spec, dedup)
-        elif not spec.get("patterns"):
-            raise SparqlError("DESCRIBE with variables needs a WHERE clause")
-        else:
-            kwargs = _exec_kwargs(spec)
-            sols = bgp_query(triples, kwargs.pop("patterns"), dedup=dedup,
-                             **kwargs)
+        sols = _group_solutions(triples, spec, dedup, stats, services)[0]
         for v in var_names:
             if v not in sols.columns:
-                raise SparqlError(f"DESCRIBE variable ?{v} is not bound by WHERE")
+                raise SparqlError(
+                    f"DESCRIBE variable ?{v} is unbound: it needs a WHERE "
+                    "clause that binds it")
             parts.append(sols.select(F.col(v).alias("r")))
     resources = parts[0]
     for q in parts[1:]:
@@ -2152,31 +2077,6 @@ def _plain_template(template: list, what: str):
         if t[1][:1] in ("^", "!") or t[1][-1:] in ("+", "*", "?"):
             raise SparqlError(f"{what} templates take plain predicates only")
     return template
-
-
-def _instantiate(sols: DataFrame, template: list) -> DataFrame:
-    """Template triples × solutions, NULL-bound rows dropped (the
-    bgp_construct instantiation, shared so DELETE and INSERT clauses
-    reuse ONE solution relation)."""
-    def term_col(term: str):
-        return F.col(term[1:]) if term.startswith("?") else F.lit(term)
-
-    parts = []
-    for t in template:
-        parts.append(
-            sols.select(
-                term_col(t[0]).alias("subj"),
-                term_col(t[1]).alias("pred"),
-                term_col(t[2]).alias("obj"),
-            ).filter(
-                F.col("subj").isNotNull() & F.col("pred").isNotNull()
-                & F.col("obj").isNotNull()
-            )
-        )
-    out = parts[0]
-    for q in parts[1:]:
-        out = out.unionByName(q)
-    return out
 
 
 def parse_sparql_update(text: str) -> list[dict]:
@@ -2317,8 +2217,8 @@ def sparql_update(triples: DataFrame, text: str, dedup: bool = True) -> DataFram
 
     Supported: ``INSERT DATA``, ``DELETE DATA``, ``DELETE WHERE``, and
     the general ``DELETE {…} INSERT {…} WHERE {…}`` form (the WHERE
-    group may contain UNION expressions and sub-SELECTs — the general
-    group executor computes the solution relation), ``;``-chained.
+    group may contain UNION expressions and sub-SELECTs — the group
+    evaluator computes the solution relation), ``;``-chained.
     Per spec each operation computes its delete and insert sets against
     the store it starts from (one shared solution relation), removes
     first, then adds; set semantics — deleting a triple removes ALL its
@@ -2349,7 +2249,7 @@ def sparql_update(triples: DataFrame, text: str, dedup: bool = True) -> DataFram
                 fresh = data.dropDuplicates(on).join(acc, on=on, how="left_anti")
                 acc = acc.unionByName(fresh)
             continue
-        where = dict(op["where"])
+        where = op["where"]
         supported = {"patterns", "optional", "filters", "values", "bind",
                      "exists", "not_exists", "minus", "unions", "subselects"}
         extra = {k for k in where if k not in supported and where[k]}
@@ -2359,26 +2259,17 @@ def sparql_update(triples: DataFrame, text: str, dedup: bool = True) -> DataFram
             raise SparqlError(
                 f"update WHERE group elements not supported: {sorted(extra)}"
             )
-        if where.get("unions") or where.get("subselects"):
-            # the general group executor (UNION / sub-SELECT in the
-            # WHERE clause) — the solution relation feeds the same
-            # template instantiation either way
-            sols = _group_solutions(acc, where, dedup)
-        else:
-            patterns = where.pop("patterns")
-            sols = bgp_query(acc, patterns, dedup=dedup,
-                             **{k: v for k, v in where.items()
-                                if k in supported})
-        base = acc
+        sols = _group_solutions(acc, where, dedup)[0]
         if op["delete"]:
-            deleted = _instantiate(sols, op["delete"]).dropDuplicates(on)
+            deleted = construct_from_solutions(sols, op["delete"],
+                                               distinct=False).dropDuplicates(on)
             acc = acc.join(deleted, on=on, how="left_anti")
         if op["insert"]:
             # inserted set computed against the PRE-delete store (sols
             # bound there), added to the post-delete store without dupes
-            inserted = _instantiate(sols, op["insert"]).dropDuplicates(on)
+            inserted = construct_from_solutions(sols, op["insert"],
+                                                distinct=False).dropDuplicates(on)
             acc = acc.unionByName(inserted.join(acc, on=on, how="left_anti"))
-        del base
     return acc
 
 

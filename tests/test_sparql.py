@@ -2,7 +2,10 @@
 the same micro-KGs the bgp compiler tests use, plus error-path pins for
 every documented out-of-scope construct."""
 
+from collections import Counter
+
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from parser_rdf_spark.sparql import SparqlError, parse_sparql, sparql_query
 
@@ -393,7 +396,7 @@ def test_closure_over_mixed_alternation(kg):
 
 def test_service_registered_relation(kg, spark):
     # SERVICE over a registered DataFrame: the body evaluates against
-    # the endpoint relation and natural-joins the enclosing group
+    # the endpoint relation and joins the enclosing group
     remote = spark.createDataFrame(
         [("a", "salary", "100"), ("c", "salary", "80"),
          ("z", "salary", "999")], kg.schema)
@@ -1493,3 +1496,145 @@ def test_sparql_query_stats_term_mode_key_encoding(spark):
     assert {r.s for r in got.collect()} == {"<s1>"}
     plan = got._jdf.queryExecution().optimizedPlan().toString()
     assert -1 < plan.find("rare") < plan.find("common")
+
+
+# ---------------------------------------------------------------------------
+# the group join follows §18.3 compatibility: a variable some piece may
+# leave unbound matches anything there
+# ---------------------------------------------------------------------------
+
+@pytest.fixture(scope="module")
+def people(spark):
+    return spark.createDataFrame(
+        [("a", "type", "Person"), ("a", "name", "Alice"), ("a", "age", "30"),
+         ("b", "age", "40")], "subj string, pred string, obj string")
+
+
+def test_union_branch_leaving_join_var_unbound(people):
+    # ?s is unbound in the second branch, so its solutions join every ?s
+    out = sparql_query(people, """
+        SELECT ?s ?v { ?s <type> <Person> .
+                       { ?s <name> ?v } UNION { ?s2 <age> ?v } }
+    """)
+    assert rows(out) == [("a", "30"), ("a", "40"), ("a", "Alice")]
+
+
+def test_sibling_binds_var_a_union_branch_leaves_unbound(people):
+    # ?v is unbound in the second branch: the sibling pattern binds it
+    out = sparql_query(people, """
+        SELECT ?s ?v { { ?s <name> ?v } UNION { ?s <age> ?w } ?s <age> ?v }
+    """)
+    assert rows(out) == [("a", "30"), ("b", "40")]
+
+
+def test_empty_group_runs_its_filters(people):
+    # every SERVICE was SILENT-skipped: the group is the single empty
+    # solution, and its FILTER still applies
+    ask = sparql_query(
+        people, "ASK { SERVICE SILENT <http://x/> { ?s ?p ?o } FILTER(false) }")
+    assert [tuple(r) for r in ask.collect()] == [(False,)]
+    sel = sparql_query(people, "SELECT * WHERE { }")
+    assert sel.count() == 1 and sel.columns == []
+
+
+def test_certain_union_variable_keeps_an_equi_join(spark):
+    # the sparql_union_join_group contract shape: ?e is bound in both
+    # branches, so the union joins its siblings on an equi-key
+    kg = spark.createDataFrame(
+        [("c1", "inNation", "n1"), ("s1", "inNation", "n1"),
+         ("c2", "inNation", "n2"), ("n1", "name", "NATION_1"),
+         ("n2", "name", "NATION_2"), ("c1", "type", "Customer"),
+         ("c1", "highBalance", "true"), ("c2", "type", "Customer"),
+         ("c2", "highBalance", "true"), ("s1", "type", "Supplier")],
+        "subj string, pred string, obj string")
+    out = sparql_query(kg, """
+        SELECT ?e ?nname WHERE {
+          ?e inNation ?n .
+          ?n name ?nname .
+          { ?e type Customer . ?e highBalance "true" }
+          UNION { ?e type Supplier }
+          FILTER (STRSTARTS(?nname, "NATION_1"))
+        }
+    """)
+    assert rows(out) == [("c1", "NATION_1"), ("s1", "NATION_1")]
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan
+
+
+def test_outer_graph_var_without_own_pattern_raises(quads):
+    with pytest.raises(SparqlError, match=r"GRAPH \?g"):
+        sparql_query(quads, """
+            SELECT ?g ?n WHERE { GRAPH ?g { GRAPH <urn:g2> { b name ?n } } }
+        """)
+
+
+def test_select_distinct_star_dedups_after_hiding_internal_vars(kg):
+    # a knows two objects through the query bnode; the hidden bnode
+    # column must not keep both rows apart
+    out = sparql_query(kg, "SELECT DISTINCT * WHERE { ?s knows _:x }")
+    assert rows(out) == [("a",), ("b",)]
+
+
+def test_construct_honours_offset(kg):
+    out = sparql_query(kg, """
+        CONSTRUCT { ?s met ?o } WHERE { ?s knows ?o } ORDER BY ?s ?o OFFSET 1
+    """)
+    assert rows(out) == [("a", "met", "c"), ("b", "met", "c")]
+
+
+_JOIN_PRED = st.sampled_from(["p0", "p1", "p2"])
+_JOIN_TERM = st.sampled_from(["?s", "?v", "?w", "a", "b"])
+_JOIN_GROUP = st.lists(st.tuples(_JOIN_TERM, _JOIN_PRED, _JOIN_TERM),
+                       min_size=1, max_size=2)
+_JOIN_NODE = st.sampled_from(["a", "b", "c"])
+_JOIN_GRAPH = st.lists(st.tuples(_JOIN_NODE, _JOIN_PRED, _JOIN_NODE),
+                       max_size=12, unique=True)
+
+
+def _oracle_group(p_pats, a_pats, b_pats, graph):
+    """§18.3 over multisets of dicts: Join(BGP(P), Union(BGP(A), BGP(B)))."""
+    def match(pattern):
+        out = []
+        for triple in graph:
+            mu = {}
+            for term, val in zip(pattern, triple):
+                if term.startswith("?"):
+                    if mu.setdefault(term[1:], val) != val:
+                        break
+                elif term != val:
+                    break
+            else:
+                out.append(mu)
+        return out
+
+    def join(left, right):
+        return [{**m1, **m2} for m1 in left for m2 in right
+                if all(m1[k] == m2[k] for k in m1.keys() & m2.keys())]
+
+    def bgp(patterns):
+        sols = [{}]
+        for pat in patterns:
+            sols = join(sols, match(pat))
+        return sols
+
+    return join(bgp(p_pats), bgp(a_pats) + bgp(b_pats))
+
+
+@settings(max_examples=25, deadline=None)
+@given(graph=_JOIN_GRAPH, p_pats=_JOIN_GROUP, a_pats=_JOIN_GROUP,
+       b_pats=_JOIN_GROUP)
+def test_group_join_matches_compatibility_oracle(spark, graph, p_pats,
+                                                 a_pats, b_pats):
+    def block(pats):
+        return " . ".join(" ".join(t) for t in pats)
+
+    df = spark.createDataFrame(graph, "subj string, pred string, obj string")
+    out = sparql_query(df, f"SELECT * WHERE {{ {block(p_pats)} . "
+                           f"{{ {block(a_pats)} }} UNION {{ {block(b_pats)} }} }}")
+    names = {t[1:] for pat in p_pats + a_pats + b_pats
+             for t in pat if t.startswith("?")}
+    assert set(out.columns) == names
+    want = _oracle_group(p_pats, a_pats, b_pats, graph)
+    assert Counter(tuple(r) for r in out.collect()) == \
+        Counter(tuple(mu.get(c) for c in out.columns) for mu in want)
