@@ -34,6 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 _POSITIONS = ("subj", "pred", "obj")
 
@@ -914,7 +915,8 @@ def bgp_query(
     SPARQL 1.1 clauses beyond the BGP core:
 
     * ``values`` — ``(var_names, rows)`` inline data (SPARQL VALUES),
-      inner-joined as a broadcast local relation on its variables;
+      inner-joined as a broadcast local relation on its variables; a
+      ``None`` cell (UNDEF) matches every value;
     * ``bind`` — {new_var: SQL expression over bound vars} (SPARQL
       BIND), applied in insertion order so later binds see earlier ones;
     * ``exists`` — pattern GROUPS kept via left-semi join on the shared
@@ -958,14 +960,34 @@ def bgp_query(
         if not names:
             raise ValueError("values needs at least one variable")
         spark = triples.sparkSession
-        inline = spark.createDataFrame(v_rows, schema=names)
+        # terms are strings; a declared schema also types an all-UNDEF
+        # column, which inference cannot
+        inline = spark.createDataFrame(v_rows, schema=T.StructType(
+            [T.StructField(n, T.StringType()) for n in names]))
         shared = sorted(bound & set(names))
         if not shared:
             raise ValueError(
                 f"VALUES variables {names} share nothing with the patterns"
             )
         # inline data is by construction tiny: broadcast, never shuffle
-        acc = acc.join(F.broadcast(inline), on=shared, how="inner")
+        loose = [v for v in shared
+                 if any(r[names.index(v)] is None for r in v_rows)]
+        if not loose:
+            acc = acc.join(F.broadcast(inline), on=shared, how="inner")
+        else:
+            # an UNDEF cell is compatible with every value (§18.3): those
+            # columns join on `u IS NULL OR v = u` and keep the patterns'
+            # (always bound) value; UNDEF-free columns stay equi-keys
+            inline = inline.select(*[
+                F.col(c).alias(f"__v_{c}") if c in shared else F.col(c)
+                for c in names])
+            cond = None
+            for v in shared:
+                u = F.col(f"__v_{v}")
+                eq = (u.isNull() | (F.col(v) == u)) if v in loose else F.col(v) == u
+                cond = eq if cond is None else cond & eq
+            acc = acc.join(F.broadcast(inline), cond, "inner").drop(
+                *[f"__v_{v}" for v in shared])
         bound |= set(names)
 
     for pat in optional or []:

@@ -36,6 +36,7 @@ COMMON_PREFIXES: dict[str, str] = {
     "sh": "http://www.w3.org/ns/shacl#",
     "schema": "https://schema.org/",
 }
+_COMMON_NS = tuple(COMMON_PREFIXES.values())
 
 
 @dataclass
@@ -173,11 +174,12 @@ def _extract_prefixes(
         prefixes.update(rdfxml.extract_xmlns_prefixes(content))
     # json-ld layer 2 == the parser's context map (already in `declared`)
 
-    # layer 4: common prefixes used by some resource term (reference :179-223)
+    # layer 4: common prefixes used by some resource term (reference :179-223);
+    # one tuple-startswith pass keeps the per-prefix scans to the few
+    # resources under any common namespace
+    used = [r for r in resources if r.startswith(_COMMON_NS)]
     for p, ns in COMMON_PREFIXES.items():
-        if p in prefixes:
-            continue
-        if any(r.startswith(ns) for r in resources):
+        if p not in prefixes and any(r.startswith(ns) for r in used):
             prefixes[p] = ns
     return prefixes
 

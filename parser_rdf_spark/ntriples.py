@@ -485,64 +485,40 @@ def tokenize_line(line: str, line_num: int, allow_graph: bool = False) -> Option
     return Triple(subj, pred, kind, obj, lang, dt, line_num, graph)
 
 
-# Fast-path line shape: escape-free, scheme-led whitespace-free IRIs,
-# well-formed bnode labels, escape-free literal with optional langtag or
-# datatype. Everything this regex ACCEPTS also passes V4-V12 and tokenizes
-# identically (char classes exclude whitespace/backslash in IRIs, ':' and
-# bad leading chars in bnode labels, '"'/'\\' in literal bodies; the
-# langtag subpattern IS the V11 grammar). Lines it rejects fall back to
-# the full validator+scanner — the fast path can only deny itself, never
-# accept something the strict path rejects.
-_IRI_F = r"[A-Za-z][A-Za-z0-9+.\-]*:[^>\s\\]*"
-_BN_F = r"[A-Za-z0-9_][^\s<>.;,:\\]*"
-_FAST_LINE = re.compile(
-    rf'(?:<({_IRI_F})>|_:({_BN_F}))'
-    rf'[ \t]*<({_IRI_F})>[ \t]*'
-    rf'(?:<({_IRI_F})>|_:({_BN_F})|"([^"\\]*)"'
-    rf'(?:@([a-zA-Z]+(?:-[a-zA-Z0-9]+)*)|\^\^<({_IRI_F})>)?)'
-    rf'[ \t]*\.',
-    re.ASCII,  # match the strict path's non-/u byte semantics for \s
-)
-
-
-def _fast_line(line: str, line_num: int) -> Optional[Triple]:
-    m = _FAST_LINE.fullmatch(line)
-    if m is None:
-        return None
-    g = m.groups()
-    subj = g[0] if g[0] is not None else "_:" + g[1]
-    if g[3] is not None:
-        return Triple(subj, g[2], "iri", g[3], None, None, line_num)
-    if g[4] is not None:
-        return Triple(subj, g[2], "bnode", "_:" + g[4], None, None, line_num)
-    return Triple(subj, g[2], "literal", g[5], g[6], g[7], line_num)
-
-
-# Document-level lexer: one regex pass over the WHOLE document, matching
-# one physical line per step — a fast triple line (same term grammar as
-# _FAST_LINE, groups 1-8, plus php-trim padding and an optional dot-free
-# trailing comment, which is exactly the set strip_trailing_comment
-# removes from fast lines), a comment line, or a blank line. This avoids
-# split("\n")'s per-line string allocations and the per-line
-# trim/comment-scan passes — the parse stage's memory traffic is the
-# 8→32 scaling bottleneck (BENCH/BASELINE.md). Any line it cannot lex
-# (non-fast triples, oversized lines, other formats) stops the scan and
-# the per-line strict path takes over from that exact line, preserving
-# decisions and first-error line numbers.
+# Document lexer: one regex pass over the WHOLE document, matching one
+# physical line per step — a triple line, a comment line or a blank line.
+# This avoids split("\n")'s per-line string allocations and the per-line
+# trim / comment-scan / validate passes; the parse stage's memory traffic
+# is the 8→32 scaling bottleneck (BENCH/BASELINE.md).
+#
+# The triple grammar is a subset of what the strict path accepts, and it
+# tokenizes identically:
+# - IRIs are scheme-led and free of whitespace, '\\', '"' and '_:' (the
+#   V5/V7/V8 checks pass; a '"' or '_:' would feed the strict path's
+#   literal and V9 scans);
+# - bnode labels have a V9-valid first char and no ':' or '"';
+# - literal bodies hold ECHAR, \uXXXX and \UXXXXXXXX escapes only (the
+#   V10 whitelist) and no '\n' (strict splits lines first, so a literal
+#   spanning a break is unterminated there);
+# - the langtag subpattern IS the V11 grammar;
+# - leading / trailing php-trim padding and a dot-free trailing comment
+#   are exactly what php_trim and strip_trailing_comment remove.
+# A line it cannot lex (or one long enough to need the byte-measured V1
+# guard) goes alone through the strict path, and the scan resumes on the
+# next line: decisions and first-error line numbers are the strict path's.
+_IRI_F = r'[A-Za-z][A-Za-z0-9+.\-]*:[^>\s\\"_]*(?:_(?!:)[^>\s\\"_]*)*'
+_BN_F = r'[A-Za-z0-9_][^\s<>.;,:\\"]*'
+_LIT_F = r'[^"\\\n]*(?:\\(?:[tbnrf"\\]|u[0-9A-Fa-f]{4}|U[0-9A-Fa-f]{8})[^"\\\n]*)*'
 _FAST_DOC = re.compile(
     r"[ \t\r\x00\x0b]*"
     rf'(?:(?:<({_IRI_F})>|_:({_BN_F}))'
     rf'[ \t]*<({_IRI_F})>[ \t]*'
-    # NB: literal body must exclude \n (unlike the per-line _FAST_LINE,
-    # which can never see one) — otherwise a literal spanning a line
-    # break lexes as one triple while the strict per-line path rejects
-    # it as an unterminated string.
-    rf'(?:<({_IRI_F})>|_:({_BN_F})|"([^"\\\n]*)"'
+    rf'(?:<({_IRI_F})>|_:({_BN_F})|"({_LIT_F})"'
     rf'(?:@([a-zA-Z]+(?:-[a-zA-Z0-9]+)*)|\^\^<({_IRI_F})>)?)'
     rf'[ \t]*\.[ \t\r\x00\x0b]*(?:#[^\n.]*)?'
     r"|#[^\n]*"
     r")?(?:\n|\Z)",
-    re.ASCII,
+    re.ASCII,  # match the strict path's non-/u byte semantics for \s
 )
 
 
@@ -562,10 +538,8 @@ def _parse_lines(
         if len(raw) > max_chars and len(raw.encode("utf-8", "surrogatepass")) > MAX_LINE_LENGTH:
             raise NTriplesError(line_num, "line exceeds maximum length")
         stripped = strip_trailing_comment(trimmed)
-        t = None if allow_graph else _fast_line(stripped, line_num)
-        if t is None:
-            _validate_stripped(stripped, line_num)
-            t = tokenize_line(stripped, line_num, allow_graph=allow_graph)
+        _validate_stripped(stripped, line_num)
+        t = tokenize_line(stripped, line_num, allow_graph=allow_graph)
         if t is not None:
             triples.append(t)
 
@@ -577,16 +551,19 @@ def parse_document(content: str, allow_graph: bool = False) -> list[Triple]:
     the caller decides whether that becomes an exception (library API) or
     an ``errors`` row (batch pipeline).
 
-    Fused single pass (each line's characters touched once by the
-    document lexer where possible): the reference validates the whole
-    document before tokenizing any line, but since any error rejects the
-    whole document, per-line validate-then-tokenize produces identical
-    documents-accepted / triples-emitted decisions; only the *reported
-    line number* can differ on documents with both a tokenizer-only and
-    a later validator error.
+    Two tokenizers, one decision: the document lexer (``_FAST_DOC``)
+    takes every line it can lex, and each line it cannot goes alone
+    through the strict per-line path before the lexer resumes on the
+    next line. The reference validates the whole document before
+    tokenizing any line, but since any error rejects the whole document,
+    per-line validate-then-tokenize produces identical documents-accepted
+    / triples-emitted decisions; only the *reported line number* can
+    differ on documents with both a tokenizer-only and a later validator
+    error. N-Quads (``allow_graph``) lines never lex and take the strict
+    path throughout.
     """
     triples: list[Triple] = []
-    if allow_graph:  # N-Quads: 4-term lines never fast-lex
+    if allow_graph:
         _parse_lines(content.split("\n"), 0, allow_graph, triples)
         return triples
 
@@ -598,30 +575,33 @@ def parse_document(content: str, allow_graph: bool = False) -> list[Triple]:
     append = triples.append
     while pos < n:
         m = match(content, pos)
-        if m is None:
-            break
-        end = m.end()
-        g = m.groups()
-        if g[2] is not None:  # predicate group set ⇒ triple branch
-            if end - pos > max_chars:
-                break  # strict path re-applies the byte-measured V1 guard
-            line_idx += 1
-            subj = g[0] if g[0] is not None else "_:" + g[1]
-            if g[3] is not None:
-                append(Triple(subj, g[2], "iri", g[3], None, None, line_idx))
-            elif g[4] is not None:
-                append(Triple(subj, g[2], "bnode", "_:" + g[4], None, None, line_idx))
-            else:
-                append(Triple(subj, g[2], "literal", g[5], g[6], g[7], line_idx))
-        else:
-            line_idx += 1  # blank or comment line
-        pos = end
-    if pos < n:
-        # split the WHOLE document and list-slice past the consumed lines
-        # (the fast loop only stops on line boundaries): content[pos:]
-        # would copy the remaining string before splitting, which makes an
-        # early fallback strictly slower than the plain strict path.
-        _parse_lines(content.split("\n")[line_idx:], line_idx, allow_graph, triples)
+        if m is not None:
+            end = m.end()
+            g = m.groups()
+            if g[2] is None:  # blank or comment line
+                line_idx += 1
+                pos = end
+                continue
+            if end - pos <= max_chars:  # else: strict's byte-measured V1
+                line_idx += 1
+                subj = g[0] if g[0] is not None else "_:" + g[1]
+                if g[3] is not None:
+                    append(Triple(subj, g[2], "iri", g[3], None, None, line_idx))
+                elif g[4] is not None:
+                    append(Triple(subj, g[2], "bnode", "_:" + g[4], None, None, line_idx))
+                else:
+                    v = g[5]
+                    if "\\" in v:
+                        v = unescape(v, line_idx)
+                    append(Triple(subj, g[2], "literal", v, g[6], g[7], line_idx))
+                pos = end
+                continue
+        eol = content.find("\n", pos)
+        if eol == -1:
+            eol = n
+        _parse_lines([content[pos:eol]], line_idx, False, triples)
+        line_idx += 1
+        pos = eol + 1
     return triples
 
 

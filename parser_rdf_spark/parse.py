@@ -58,6 +58,71 @@ def doc_hash(url: str) -> str:
     return hashlib.blake2b(url.encode("utf-8"), digest_size=8).hexdigest()
 
 
+def parse_page(
+    text: Optional[str], html: Optional[bytes], fmt: Optional[str] = None,
+    empty_guard: bool = True,
+) -> _formats.DocResult:
+    """One page through the whole per-document parse: HTML→text when
+    ``text`` is null, detect + parse, then the fallbacks auto-detection
+    needs — the raw HTML's structured data when the text is not RDF, and
+    the N-Quads / TriG / RDF-star retries when a sniffed parse fails.
+    The Spark stage (:func:`_parse_batch`) and the no-Spark control
+    (``scripts/scaling_control.py``) both run exactly this."""
+    if not isinstance(text, str) and html is not None:
+        # fused stage 1: byte-identical text extraction (html_text.py)
+        text = html_bytes_to_text(bytes(html))
+    res = _formats.parse_rdf_document(
+        text if isinstance(text, str) else "", fmt, empty_guard=empty_guard
+    )
+    if res.error_stage == "format_detection" and fmt is None and html is not None:
+        # the tag-stripped text isn't RDF, but the raw HTML may still
+        # carry structured data (microdata / RDFa / embedded JSON-LD)
+        raw = bytes(html).decode("utf-8", errors="replace")
+        if _htmldata.can_handle(raw):
+            res = _formats.parse_rdf_document(raw, "html", empty_guard=empty_guard)
+    elif not res.ok and fmt is None and isinstance(text, str):
+        if res.format == "n-triples" and _nquads.can_handle(text):
+            # four-term lines satisfy the (reference-pinned) n-triples
+            # sniffer but fail its strict parse — retry as N-Quads
+            res = _formats.parse_rdf_document(text, "n-quads", empty_guard=empty_guard)
+        if (
+            not res.ok
+            and res.format in ("n-triples", "n-quads", "turtle")
+            and "{" in text
+        ):
+            # '@prefix'-led / pname-labeled TriG sniffs as Turtle
+            # (reference-pinned D6); GRAPH-block docs whose inner
+            # lines are triple-shaped sniff as N-Triples (D5). Either
+            # strict parse fails on the block syntax — retry as TriG.
+            # The '{' gate is deliberately loose (only failed docs
+            # pay the retry), so keep the result ONLY if TriG
+            # actually parses; otherwise the original error stands.
+            retry = _formats.parse_rdf_document(text, "trig", empty_guard=empty_guard)
+            if retry.ok:
+                res = retry
+        if (
+            not res.ok
+            and res.format in ("n-triples", "n-quads", "turtle")
+            and "<<" in text
+        ):
+            # line-shaped RDF-star docs sniff as N-Triples (D5) but
+            # the strict RDF 1.1 parser rejects '<<' — retry as
+            # N-Triples-star, then N-Quads-star (4-term lines); keep
+            # only a successful retry. (Turtle/TriG-sniffed docs
+            # parse star natively — turtle.py — so this retry only
+            # fires for them on other parse errors.)
+            retry = _formats.parse_rdf_document(
+                text, "ntriples-star", empty_guard=empty_guard
+            )
+            if not retry.ok:
+                retry = _formats.parse_rdf_document(
+                    text, "nquads-star", empty_guard=empty_guard
+                )
+            if retry.ok:
+                res = retry
+    return res
+
+
 def _parse_batch(
     urls: list, texts: list, htmls: list, fmt: Optional[str], scope: bool, empty_guard: bool
 ) -> pa.RecordBatch:
@@ -84,63 +149,7 @@ def _parse_batch(
     graph_term: list = []
 
     for i in range(n):
-        text = texts[i]
-        if not isinstance(text, str) and htmls[i] is not None:
-            # fused stage 1: byte-identical text extraction (html_text.py)
-            text = html_bytes_to_text(bytes(htmls[i]))
-        res = _formats.parse_rdf_document(
-            text if isinstance(text, str) else "", fmt, empty_guard=empty_guard
-        )
-        if (
-            res.error_stage == "format_detection"
-            and fmt is None
-            and htmls[i] is not None
-        ):
-            # the tag-stripped text isn't RDF, but the raw HTML may still
-            # carry structured data (microdata / RDFa / embedded JSON-LD)
-            raw = bytes(htmls[i]).decode("utf-8", errors="replace")
-            if _htmldata.can_handle(raw):
-                res = _formats.parse_rdf_document(raw, "html", empty_guard=empty_guard)
-        elif not res.ok and fmt is None and isinstance(text, str):
-            if res.format == "n-triples" and _nquads.can_handle(text):
-                # four-term lines satisfy the (reference-pinned) n-triples
-                # sniffer but fail its strict parse — retry as N-Quads
-                res = _formats.parse_rdf_document(text, "n-quads", empty_guard=empty_guard)
-            if (
-                not res.ok
-                and res.format in ("n-triples", "n-quads", "turtle")
-                and "{" in text
-            ):
-                # '@prefix'-led / pname-labeled TriG sniffs as Turtle
-                # (reference-pinned D6); GRAPH-block docs whose inner
-                # lines are triple-shaped sniff as N-Triples (D5). Either
-                # strict parse fails on the block syntax — retry as TriG.
-                # The '{' gate is deliberately loose (only failed docs
-                # pay the retry), so keep the result ONLY if TriG
-                # actually parses; otherwise the original error stands.
-                retry = _formats.parse_rdf_document(text, "trig", empty_guard=empty_guard)
-                if retry.ok:
-                    res = retry
-            if (
-                not res.ok
-                and res.format in ("n-triples", "n-quads", "turtle")
-                and "<<" in text
-            ):
-                # line-shaped RDF-star docs sniff as N-Triples (D5) but
-                # the strict RDF 1.1 parser rejects '<<' — retry as
-                # N-Triples-star, then N-Quads-star (4-term lines); keep
-                # only a successful retry. (Turtle/TriG-sniffed docs
-                # parse star natively — turtle.py — so this retry only
-                # fires for them on other parse errors.)
-                retry = _formats.parse_rdf_document(
-                    text, "ntriples-star", empty_guard=empty_guard
-                )
-                if not retry.ok:
-                    retry = _formats.parse_rdf_document(
-                        text, "nquads-star", empty_guard=empty_guard
-                    )
-                if retry.ok:
-                    res = retry
+        res = parse_page(texts[i], htmls[i], fmt, empty_guard)
         triples = res.triples
         if scope and triples:
             triples = _formats.scope_bnodes(triples, doc_hash(urls[i]))

@@ -3,7 +3,8 @@
 BENCH/BASELINE.md attributes the 8→32 scaling shortfall to shared memory
 bandwidth, not the engine: this script RUNS that claim. It executes the
 exact per-document work of the fused parse stage (HTML→text, detect,
-validate, tokenize — the same functions `parse._parse_batch` calls) under
+validate, tokenize and the fallback retries: `parse.parse_page`, the
+function `parse._parse_batch` calls per page) under
 bare ``multiprocessing`` — no Spark, no JVM, no Arrow — at 8 and 32
 taskset-pinned processes over the same bench corpus, and writes the
 measured efficiency to ``BENCH/scaling_control.json``.
@@ -44,31 +45,13 @@ N = len(URLS)
 
 
 def parse_range(bounds):
-    # the same per-document pipeline parse._parse_batch runs, minus the
-    # Arrow assembly (we only count triples here)
-    from parser_rdf_spark import formats as _formats
-    from parser_rdf_spark import htmldata as _htmldata
-    from parser_rdf_spark import nquads as _nquads
-    from parser_rdf_spark.html_text import html_bytes_to_text
+    # parse.parse_page is the per-document body of parse._parse_batch;
+    # only the bnode scoping and Arrow assembly are left out (we only
+    # count triples here)
+    from parser_rdf_spark.parse import parse_page
 
     lo, hi = bounds
-    n = 0
-    for i in range(lo, hi):
-        html = HTMLS[i]
-        text = html_bytes_to_text(bytes(html)) if html is not None else ""
-        res = _formats.parse_rdf_document(text)
-        if res.error_stage == "format_detection" and html is not None:
-            raw = bytes(html).decode("utf-8", errors="replace")
-            if _htmldata.can_handle(raw):
-                res = _formats.parse_rdf_document(raw, "html")
-        elif (
-            not res.ok
-            and res.format == "n-triples"
-            and _nquads.can_handle(text)
-        ):
-            res = _formats.parse_rdf_document(text, "n-quads")
-        n += len(res.triples)
-    return n
+    return sum(len(parse_page(None, HTMLS[i]).triples) for i in range(lo, hi))
 
 
 if __name__ == "__main__":

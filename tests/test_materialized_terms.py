@@ -8,6 +8,9 @@ the constant-predicate filter all the way to the parquet scan — pushed
 predicate AND pred_bucket partition pruning — which the derived
 concat-projection can never do (Catalyst cannot invert concat)."""
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 from parser_rdf_spark.bgp import bgp_query, terms_spo
@@ -105,3 +108,25 @@ def test_prune_is_noop_without_metadata(spark, tmp_path):
     raw = spark.read.parquet(os.path.join(str(tmp_path / "g5"), "terms"))
     q = bgp_query(raw, [("?s", f"<{EX}label>", "?o")], select=["?s"])
     assert q.count() == 8
+
+
+def test_non_default_pred_buckets_prune_and_resume(spark, tmp_path):
+    # the bucket count travels in the terms table's column metadata, so a
+    # KG written with pred_buckets != 64 prunes on its own bucket function,
+    # and a killed run resumes under the same config
+    root = str(tmp_path / "g6")
+    pages = pages_df(spark, _docs(12))
+    with pytest.raises(RuntimeError, match="simulated failure"):
+        GraphWriter(root, url_buckets=2, pred_buckets=7).run(
+            spark, pages, run_id="r1", fail_after_buckets=1)
+    w = GraphWriter(root, url_buckets=2, pred_buckets=7)
+    res = w.run(spark, pages, run_id="r2")
+    assert res.buckets_skipped == 1 and res.buckets_processed == 1
+    q = bgp_query(w.terms(spark), [("?s", f"<{EX}label>", "?o")], select=["?s", "?o"])
+    m = re.search(r"PartitionFilters: \[isnotnull\(pred_bucket#\d+\), "
+                  r"\(pred_bucket#\d+ = (\d+)\)\]", _plan(q))
+    assert m, _plan(q)
+    want = spark.range(1).select(
+        F.pmod(F.xxhash64(F.lit(f"<{EX}label>")), F.lit(7)).cast("int")).first()[0]
+    assert int(m.group(1)) == want
+    assert q.count() == 12 and w.terms(spark).count() == 24

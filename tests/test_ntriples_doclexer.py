@@ -56,7 +56,8 @@ EDGE_DOCS = [
     # blank/comment/CR padding interleavings (line numbers must track)
     "\n\n# c\n<a:s> <a:p> <a:o> .\r\n\n<bad\n",
     "\x00 <a:s> <a:p> <a:o> . \x0b\r\n",
-    # escaped literal (never fast-lexes) after fast lines: line numbers
+    # escaped literal (lexed and unescaped) after fast lines, then a
+    # malformed line: line numbers
     ' <a:s> <a:p> <a:o> .\n<a:s> <a:p> "a\\tb" .\n<a:s> <a:p> <a:o\n',
     # bnode subject/object, language tag, datatype
     "_:b1 <a:p> _:b2 .\n",
@@ -77,9 +78,34 @@ EDGE_DOCS = [
     "\n",
     # triple-quote ban (V4)
     '<a:s> <a:p> """x""" .\n',
-    # unicode-escape whitelist (V8/V10) — \\ falls to strict
+    # literal escapes the lexer takes: ECHAR, \\u, \\U (V10 whitelist)
     '<a:s> <a:p> "\\u0041" .\n',
+    '<a:s> <a:p> "a\\tb" .\n<a:s> <a:p> "say \\"hi\\"" .\n<a:s> <a:p> "x\\\\y" .\n',
+    '<a:s> <a:p> "caf\\u00e9"@fr .\n<a:s> <a:p> "\\U0001F600"^^<a:dt> .\n',
+    '<a:s> <a:p> "\\b\\n\\r\\f" . # c\n',
+    # \\" or \\\\ right before the closing quote
+    '<a:s> <a:p> "end\\"" .\n<a:s> <a:p> "end\\\\" .\n',
+    '<a:s> <a:p> "\\\\" .\n<a:s> <a:p> "\\\\\\"" .\n',
+    # invalid escapes: strict rejects, with the line number
     '<a:s> <a:p> "\\q" .\n',
+    '<a:s> <a:p> <a:o> .\n<a:s> <a:p> "\\u12" .\n',
+    '<a:s> <a:p> "ok" .\n\n<a:s> <a:p> "\\U00110000" .\n',
+    '<a:s> <a:p> "x\\U0011000" .\n',
+    # a lone surrogate escape decodes the same on both paths
+    '<a:s> <a:p> "\\uD800" .\n',
+    # a malformed or overlong line BETWEEN fast lines: the strict path
+    # takes that one line and the lexer resumes on the next
+    '<a:s> <a:p> <a:o> .\n<a:s> <a:p> <a:\\u0041> .\n<a:s> <a:p> "x\\ty" .\n',
+    '<a:s> <a:p> <a:o> .\n<a:s> <a:p> <a:o> . # v1.2\n<a:s> <a:p> <a:o> .\n',
+    '<a:s> <a:p> <a:o> .\n\x0c\n<a:s> <a:p> <a:o> .\n',
+    '<a:s> <a:p> <a:o> .\n<a:s> <a:p> <a:o>\n<a:s> <a:p> <a:o> .\n',
+    '<a:s> <a:p> <a:o> .\n<a:s> <a:p> <a:o> .\n# c\n<rel> <a:p> <a:o> .\n',
+    # terms the lexer defers: '"' or '_:' in an IRI, '"' in a bnode
+    # label (they feed the strict path's literal and V9 scans)
+    '<a:s> <a:p> <a:_:-x> .\n',
+    '<a:s> <a:p> <a:x_:y> .\n<a:s> <a:p> <a:x_y> .\n',
+    '<a:"> <a:p> "y" . # c\n',
+    '_:b"x"@1 <a:p> <a:o> .\n',
 ]
 
 
@@ -93,6 +119,12 @@ def test_long_line_guard_consistent():
     # conservative cap must fall through and get strict's byte-measured V1
     long_iri = "a:" + "x" * (nt.MAX_LINE_LENGTH // 4)
     assert_equiv(f"<a:s> <a:p> <{long_iri}> .\n")
+    # between fast lines: accepted by strict's byte count, lexing resumes
+    doc = f"<a:s> <a:p> <a:o> .\n<a:s> <a:p> <{long_iri}> .\n<a:s> <a:p> \"\\t\" .\n"
+    assert_equiv(doc)
+    assert [t.line_no for t in nt.parse_document(doc)] == [1, 2, 3]
+    # a multi-byte line over the 1 MiB byte cap is rejected on its line
+    assert_equiv("<a:s> <a:p> <a:o> .\n<a:s> <a:p> <a:" + "é" * nt.MAX_LINE_LENGTH + "> .\n")
 
 
 def test_allow_graph_uses_strict_path_only():
@@ -110,7 +142,12 @@ def test_allow_graph_uses_strict_path_only():
 _iri = st.sampled_from(
     ["a:x", "http://ex.org/o#frag", "http://ex.org/v1.2", "a:" + "y" * 40]
 )
-_lit = st.sampled_from(["", "plain", "two  words", "dot.", 'say "hi"', "tab\tin"])
+_lit = st.sampled_from([
+    "", "plain", "two  words", "dot.", 'say "hi"', "tab\tin",
+    # escapes: valid, right before the closing quote, invalid, out of range
+    "a\\tb", 'q\\"', "bs\\\\", "\\u00e9", "\\U0001F600", "\\uD800",
+    "\\q", "\\u12", "\\U00110000", "a;b,c",
+])
 _comment = st.sampled_from(["# c", "# v1.2", '# "a.', "#", "  # x y"])
 
 _line = st.one_of(
@@ -133,6 +170,8 @@ _line = st.one_of(
     st.just('<a:s> <a:p> "unterminated .'),
     st.just('<a:s> <a:p> "multi'),
     st.just('line" .'),
+    st.just("<a:s> <a:p> <a:_:-x> ."),
+    st.just('<a:s> <a:p> "x" . # v1.2'),
 )
 
 

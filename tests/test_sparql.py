@@ -159,9 +159,23 @@ def test_values_single_and_multi(kg):
           VALUES (?p ?n) { ("a" "Alice") ("b" UNDEF) }
         }
     """)
-    # UNDEF row: join on both columns — NULL never equi-joins, so only
-    # the fully-bound row survives (matches bgp values semantics)
-    assert rows(out2) == [("a", "Alice")]
+    # UNDEF matches every value (§18.3): ("b" UNDEF) joins b's name
+    assert rows(out2) == [("a", "Alice"), ("b", "Bob")]
+
+
+def test_values_undef_matches_every_value(spark):
+    g = spark.createDataFrame([("a", "knows", "b"), ("b", "knows", "c")],
+                              "subj string, pred string, obj string")
+    out = sparql_query(g, "SELECT ?s ?o { ?s knows ?o VALUES ?o { UNDEF c } }")
+    assert rows(out) == [("a", "b"), ("b", "c"), ("b", "c")]
+    # an UNDEF-only column and a non-shared column next to an equi-key
+    out2 = sparql_query(g, """
+        SELECT ?s ?o ?t { ?s knows ?o VALUES (?s ?o ?t) { (a UNDEF x) (b c y) } }
+    """)
+    assert rows(out2) == [("a", "b", "x"), ("b", "c", "y")]
+    # an all-UNDEF column (no type to infer) matches everything
+    out3 = sparql_query(g, "SELECT ?s ?o { ?s knows ?o VALUES ?o { UNDEF } }")
+    assert rows(out3) == [("a", "b"), ("b", "c")]
 
 
 def test_bind(kg):
