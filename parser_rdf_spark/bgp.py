@@ -969,25 +969,23 @@ def bgp_query(
             raise ValueError(
                 f"VALUES variables {names} share nothing with the patterns"
             )
-        # inline data is by construction tiny: broadcast, never shuffle
-        loose = [v for v in shared
-                 if any(r[names.index(v)] is None for r in v_rows)]
-        if not loose:
-            acc = acc.join(F.broadcast(inline), on=shared, how="inner")
-        else:
-            # an UNDEF cell is compatible with every value (§18.3): those
-            # columns join on `u IS NULL OR v = u` and keep the patterns'
-            # (always bound) value; UNDEF-free columns stay equi-keys
-            inline = inline.select(*[
-                F.col(c).alias(f"__v_{c}") if c in shared else F.col(c)
-                for c in names])
-            cond = None
-            for v in shared:
-                u = F.col(f"__v_{v}")
-                eq = (u.isNull() | (F.col(v) == u)) if v in loose else F.col(v) == u
-                cond = eq if cond is None else cond & eq
-            acc = acc.join(F.broadcast(inline), cond, "inner").drop(
-                *[f"__v_{v}" for v in shared])
+        # inline data is by construction tiny: broadcast, never shuffle.
+        # An UNDEF cell is compatible with every value (§18.3): a column
+        # holding one joins on `u IS NULL OR v = u` and keeps the
+        # patterns' (always bound) value; the other columns stay
+        # equalities, which Catalyst plans as broadcast hash-join keys
+        loose = {v for v in shared
+                 if any(r[names.index(v)] is None for r in v_rows)}
+        inline = inline.select(*[
+            F.col(c).alias(f"__v_{c}") if c in shared else F.col(c)
+            for c in names])
+        cond = None
+        for v in shared:
+            u = F.col(f"__v_{v}")
+            eq = (u.isNull() | (F.col(v) == u)) if v in loose else F.col(v) == u
+            cond = eq if cond is None else cond & eq
+        acc = acc.join(F.broadcast(inline), cond, "inner").drop(
+            *[f"__v_{v}" for v in shared])
         bound |= set(names)
 
     for pat in optional or []:

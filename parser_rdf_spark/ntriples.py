@@ -493,9 +493,9 @@ def tokenize_line(line: str, line_num: int, allow_graph: bool = False) -> Option
 #
 # The triple grammar is a subset of what the strict path accepts, and it
 # tokenizes identically:
-# - IRIs are scheme-led and free of whitespace, '\\', '"' and '_:' (the
-#   V5/V7/V8 checks pass; a '"' or '_:' would feed the strict path's
-#   literal and V9 scans);
+# - IRIs are scheme-led and free of whitespace, '<', '\\', '"' and '_:'
+#   (the V5/V7/V8 checks pass; a '<' would restart the strict path's IRI
+#   extraction, a '"' or '_:' would feed its literal and V9 scans);
 # - bnode labels have a V9-valid first char and no ':' or '"';
 # - literal bodies hold ECHAR, \uXXXX and \UXXXXXXXX escapes only (the
 #   V10 whitelist) and no '\n' (strict splits lines first, so a literal
@@ -506,7 +506,7 @@ def tokenize_line(line: str, line_num: int, allow_graph: bool = False) -> Option
 # A line it cannot lex (or one long enough to need the byte-measured V1
 # guard) goes alone through the strict path, and the scan resumes on the
 # next line: decisions and first-error line numbers are the strict path's.
-_IRI_F = r'[A-Za-z][A-Za-z0-9+.\-]*:[^>\s\\"_]*(?:_(?!:)[^>\s\\"_]*)*'
+_IRI_F = r'[A-Za-z][A-Za-z0-9+.\-]*:[^<>\s\\"_]*(?:_(?!:)[^<>\s\\"_]*)*'
 _BN_F = r'[A-Za-z0-9_][^\s<>.;,:\\"]*'
 _LIT_F = r'[^"\\\n]*(?:\\(?:[tbnrf"\\]|u[0-9A-Fa-f]{4}|U[0-9A-Fa-f]{8})[^"\\\n]*)*'
 _FAST_DOC = re.compile(

@@ -106,6 +106,11 @@ EDGE_DOCS = [
     '<a:s> <a:p> <a:x_:y> .\n<a:s> <a:p> <a:x_y> .\n',
     '<a:"> <a:p> "y" . # c\n',
     '_:b"x"@1 <a:p> <a:o> .\n',
+    # '<' inside an IRI restarts the strict path's IRI extraction
+    # (relative or empty IRI): the lexer must defer, not take one IRI
+    '<a:s> <a:p> <a:x<y> .\n',
+    '<a:s> <a:p> <a:x<b:y> .\n',
+    '<a:s> <a:p> <a:x<> .\n<a:s> <a:p> <a:o> .\n',
 ]
 
 
@@ -140,7 +145,8 @@ def test_allow_graph_uses_strict_path_only():
 # biased toward the fast/strict boundary.
 
 _iri = st.sampled_from(
-    ["a:x", "http://ex.org/o#frag", "http://ex.org/v1.2", "a:" + "y" * 40]
+    ["a:x", "http://ex.org/o#frag", "http://ex.org/v1.2", "a:" + "y" * 40,
+     "a:x<y", "a:x<b:y"]
 )
 _lit = st.sampled_from([
     "", "plain", "two  words", "dot.", 'say "hi"', "tab\tin",
