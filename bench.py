@@ -25,6 +25,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from parser_rdf_spark.extract import extract_classes, extract_properties  # noqa: E402
 from parser_rdf_spark.fixtures import synth_pages  # noqa: E402
 from parser_rdf_spark.linking import (  # noqa: E402
+    ConvergenceError,
     connected_components,
     link_entities,
     minhash_lsh_blocking,
@@ -58,6 +59,18 @@ def _best_of(fn, n: int = None) -> float:
     return round(best, 3)
 
 
+def _load() -> list[float]:
+    return [round(x, 2) for x in os.getloadavg()]
+
+
+def _row(queries: dict, loads: dict, name: str, fn, n: int = None) -> None:
+    """Time one ``queries`` row (best-of) and record the host's
+    1/5/15-minute load averages before and after it in ``loads``."""
+    before = _load()
+    queries[name] = _best_of(fn, n)
+    loads[name] = {"before": before, "after": _load()}
+
+
 def _pages_cache(spark, n_docs: int, cpus: int):
     # _v2: corpus version (structured-data HTML page class added)
     path = f"/tmp/spark_graft_bench/pages_n{n_docs}_s{SEED}_v2"
@@ -86,6 +99,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     queries: dict[str, float] = {}
+    loads: dict[str, dict] = {}
     pages = _pages_cache(spark, N_DOCS, cpus)
 
     # q1: the flagship — fused detect+validate+parse over the corpus.
@@ -104,7 +118,7 @@ def main() -> None:
     # burst has been observed to cover a whole best-of-3 window (8.5 s
     # recorded where an isolated re-run reads 2.0 s); two extra repeats
     # cost seconds and protect the round-over-round comparison
-    queries["parse_triples"] = _best_of(_q_parse, n=max(BEST_OF, 5))
+    _row(queries, loads, "parse_triples", _q_parse, n=max(BEST_OF, 5))
     t_parse = queries["parse_triples"]
     # untimed: stage the parsed table once for q2/q3
     parsed = parse_pages(pages).persist()
@@ -128,24 +142,34 @@ def main() -> None:
         res.unpersist()
 
     _q_extract()  # untimed warm-up (codegen compile)
-    queries["extract_entities"] = _best_of(_q_extract)
+    _row(queries, loads, "extract_entities", _q_extract)
 
     # q3: linking + edge materialization + connected components on a
-    # bounded slice (CC is iterative; bound the vertex set for the bench)
-    t0 = time.time()
-    entities = spark.createDataFrame(
-        [(f"http://data.example.org/e{i}", f"http://canon.example.org/E{i}") for i in range(0, 2000)],
-        "surface string, canonical_iri string",
-    )
-    linked = link_entities(triples, entities)
-    _ = linked.filter(F.col("canonical_obj").startswith("http://canon")).count()
-    edges = build_edges(triples)
-    cc_edges = edges.filter(F.col("pred").endswith("seeAlso")).limit(20000)
-    _ = connected_components(
-        cc_edges.select(F.col("subj").alias("src"), F.col("obj").alias("dst")),
-        max_iters=10,
-    ).count()
-    queries["link_and_components"] = round(time.time() - t0, 3)
+    # bounded slice (CC is iterative; bound the vertex set for the bench).
+    # The corpus's seeAlso edges chain e{k} -> e{k+1} across documents, so
+    # 10 rounds may not converge: the row then times the 10 rounds and
+    # ``components_converged`` says the labels were not components.
+    components_converged = True
+
+    def _q_link():
+        nonlocal components_converged
+        entities = spark.createDataFrame(
+            [(f"http://data.example.org/e{i}", f"http://canon.example.org/E{i}") for i in range(0, 2000)],
+            "surface string, canonical_iri string",
+        )
+        linked = link_entities(triples, entities)
+        _ = linked.filter(F.col("canonical_obj").startswith("http://canon")).count()
+        edges = build_edges(triples)
+        cc_edges = edges.filter(F.col("pred").endswith("seeAlso")).limit(20000)
+        try:
+            _ = connected_components(
+                cc_edges.select(F.col("subj").alias("src"), F.col("obj").alias("dst")),
+                max_iters=10,
+            ).count()
+        except ConvergenceError:
+            components_converged = False
+
+    _row(queries, loads, "link_and_components", _q_link, n=1)
 
     # q3b: BGP pattern query — a 4-pattern chain (two constant-bound
     # patterns + a seeAlso hop + a label lookup) compiled to self-joins
@@ -169,7 +193,7 @@ def main() -> None:
         )
         _ = out.count()
 
-    queries["bgp_chain_query"] = _best_of(_q_bgp)
+    _row(queries, loads, "bgp_chain_query", _q_bgp)
 
     # q3c: SHACL validation + predicate statistics over the full corpus —
     # ontology-sized shapes broadcast onto the instance scan (the
@@ -208,7 +232,7 @@ def main() -> None:
         _ = shacl_validate(spo, shapes).count()
         _ = predicate_statistics(spo).count()
 
-    queries["shacl_stats"] = _best_of(_q_shacl)
+    _row(queries, loads, "shacl_stats", _q_shacl)
 
     # q3d: sink-side export — the full parsed corpus rendered to
     # N-Triples lines AND prefix-compacted Turtle documents (round-3
@@ -222,7 +246,7 @@ def main() -> None:
         _ = to_ntriples(triples_full).count()
         _ = to_turtle_docs(triples_full).count()
 
-    queries["serialize_export"] = _best_of(_q_serialize)
+    _row(queries, loads, "serialize_export", _q_serialize)
 
     # q3e: graph-level canonical dedup over the full parsed corpus —
     # 2-round WL color refinement (4 key-partitioned joins + 2 groupBys
@@ -233,7 +257,7 @@ def main() -> None:
     def _q_canonical():
         _ = isomorphic_duplicates(triples_full, rounds=2).count()
 
-    queries["graph_canonicalize"] = _best_of(_q_canonical)
+    _row(queries, loads, "graph_canonicalize", _q_canonical)
 
     # q3f: term-mode SPARQL over the term-encoded relation of the full
     # parsed corpus (round-5 first-class row; r04 measured it ad hoc at
@@ -258,7 +282,7 @@ def main() -> None:
         """, term_mode=True)
         _ = out.count()
 
-    queries["term_mode_query"] = _best_of(_q_term_mode)
+    _row(queries, loads, "term_mode_query", _q_term_mode)
 
     parsed.unpersist()
 
@@ -277,14 +301,14 @@ def main() -> None:
         _ = textops.exact_dedup_groups(docs).count()
         _ = minhash_lsh_blocking(docs, "text", "doc_id", num_hashes=32, bands=8).count()
 
-    queries["dedup_exact_minhash"] = _best_of(_q_dedup)
+    _row(queries, loads, "dedup_exact_minhash", _q_dedup)
 
     def _q_text():
         _ = textops.token_stats(docs).count()
         _ = textops.quality_score(docs).count()
         _ = textops.lang_id(docs).count()
 
-    queries["text_analysis"] = _best_of(_q_text)
+    _row(queries, loads, "text_analysis", _q_text)
 
     # q5b: ExactSubstr dedup (round-5 first-class row; r04 measured it
     # ad hoc): the corpus-token window scan + ONE map-combinable
@@ -293,7 +317,7 @@ def main() -> None:
         _ = textops.substring_dup_spans(docs, k=12).count()
         _ = textops.substring_dedup_clean(docs, k=12).count()
 
-    queries["substring_dedup"] = _best_of(_q_substring)
+    _row(queries, loads, "substring_dedup", _q_substring)
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(cpus).persist()
     emb.count()
@@ -302,7 +326,7 @@ def main() -> None:
         qs = emb.filter(F.col("vec_id") < 100)
         _ = textops.ann_bruteforce_topk(emb, queries=qs, k=5).count()
 
-    queries["ann_cosine_topk"] = _best_of(_q_ann)
+    _row(queries, loads, "ann_cosine_topk", _q_ann)
     emb.unpersist()
 
     # q7: graph analytics over an events-derived edge relation (same
@@ -321,7 +345,7 @@ def main() -> None:
         _ = graphops.triangle_count(g).collect()
         _ = graphops.pagerank(g, n_iter=3).count()
 
-    queries["graph_analytics"] = _best_of(_q_graph)
+    _row(queries, loads, "graph_analytics", _q_graph)
 
     # q7b: graph-ML preprocessing over the same edge relation (round-3
     # ops): 2-core peeling, co-neighbor-blocked Jaccard candidates,
@@ -333,7 +357,7 @@ def main() -> None:
             F.col("src").cast("string").alias("src"),
             F.col("dst").cast("string").alias("dst")), walk_length=4).count()
 
-    queries["graph_ml"] = _best_of(_q_graph_ml)
+    _row(queries, loads, "graph_ml", _q_graph_ml)
 
     # q8: sessionization (native SESSION window agg) + per-doc TF-IDF
     # top terms
@@ -343,7 +367,7 @@ def main() -> None:
         _ = sessionize(ev, "user_id", "ts").count()
         _ = textops.tfidf_top_terms(docs, k=3).count()
 
-    queries["sessionize_tfidf"] = _best_of(_q_sess)
+    _row(queries, loads, "sessionize_tfidf", _q_sess)
     ev.unpersist()
 
     # q9: pipeline hygiene — benchmark decontamination (broadcast gram
@@ -357,7 +381,7 @@ def main() -> None:
             docs, {"en": 0.5, "de": 0.25, "fr": 0.125, "es": 0.0625}, default_fraction=1.0
         ).count()
 
-    queries["hygiene_ops"] = _best_of(_q_hygiene)
+    _row(queries, loads, "hygiene_ops", _q_hygiene)
 
     docs.unpersist()
     spark.stop()
@@ -379,6 +403,10 @@ def main() -> None:
                 "n_properties": n_props,
                 "cpus": cpus,
                 "best_of": BEST_OF,
+                "components_converged": components_converged,
+                # host readings: the CPU count and, per queries row, the
+                # 1/5/15-minute load averages before and after it
+                "host": {"cpu_count": os.cpu_count(), "load": loads},
             }
         )
     )

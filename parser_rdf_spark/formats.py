@@ -17,7 +17,7 @@ text column through the JVM↔Python boundary twice.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Callable, Optional
+from typing import Callable, Optional, Sequence
 
 from . import htmldata, jsonld, nquads, ntriples, rdfstar, rdfxml, trig, turtle
 from .ntriples import Triple
@@ -253,32 +253,46 @@ def parse_rdf_document(
     )
 
 
+def scope_columns(
+    subj: Sequence[str], obj_kind: Sequence[str], obj_value: Sequence[str],
+    graph: Sequence[Optional[str]], doc_hash: str,
+) -> tuple[Sequence[str], Sequence[str], Sequence[Optional[str]]]:
+    """P5 on one document's triple columns: rewrite ``_:label`` →
+    ``_:d{doc_hash}-label`` in subjects, bnode objects and graph terms,
+    and inside quoted-triple subjects and objects (so asserted and
+    quoted occurrences keep one label per document), so the global
+    triples table never collides across documents.
+
+    Returns the (subj, obj_value, graph) columns; a column with nothing
+    to rewrite comes back as the same object. Only a term holding
+    ``_:`` can change, so one substring test over the joined column
+    skips the per-term pass for most documents."""
+    pre = f"_:d{doc_hash}-"
+    if "_:" in "".join(subj):
+        subj = [
+            pre + s[2:] if s[:2] == "_:"
+            else rdfstar.rescope_quoted(s, doc_hash) if s[:2] == "<<"
+            else s
+            for s in subj
+        ]
+    if "_:" in "".join(obj_value):
+        obj_value = [
+            pre + v[2:] if k == "bnode" and v[:2] == "_:"
+            else rdfstar.rescope_quoted(v, doc_hash) if k == "quoted"
+            else v
+            for k, v in zip(obj_kind, obj_value)
+        ]
+    if graph.count(None) != len(graph):
+        graph = [pre + g[2:] if g is not None and g[:2] == "_:" else g for g in graph]
+    return subj, obj_value, graph
+
+
 def scope_bnodes(triples: list[Triple], doc_hash: str) -> list[Triple]:
-    """P5: rewrite ``_:label`` → ``_:d{doc_hash}-label`` so the global
-    triples table never collides across documents."""
-    out: list[Triple] = []
-    for t in triples:
-        if t.subj.startswith("_:"):
-            subj = f"_:d{doc_hash}-{t.subj[2:]}"
-        elif t.subj.startswith("<<"):
-            # quoted-triple subject: scope the bnodes INSIDE the term so
-            # asserted and quoted occurrences keep one label per doc
-            subj = rdfstar.rescope_quoted(t.subj, doc_hash)
-        else:
-            subj = t.subj
-        if t.obj_kind == "bnode" and t.obj_value.startswith("_:"):
-            obj = f"_:d{doc_hash}-{t.obj_value[2:]}"
-        elif t.obj_kind == "quoted":
-            obj = rdfstar.rescope_quoted(t.obj_value, doc_hash)
-        else:
-            obj = t.obj_value
-        graph = t.graph
-        if graph is not None and graph.startswith("_:"):
-            graph = f"_:d{doc_hash}-{graph[2:]}"
-        if subj is not t.subj or obj is not t.obj_value or graph is not t.graph:
-            out.append(
-                Triple(subj, t.pred, t.obj_kind, obj, t.obj_lang, t.obj_datatype, t.line_no, graph)
-            )
-        else:
-            out.append(t)
-    return out
+    """:func:`scope_columns` over a list of triples (list in, list out)."""
+    if not triples:
+        return []
+    s, p, k, v, lang, dt, line, g = zip(*triples)
+    s2, v2, g2 = scope_columns(s, k, v, g, doc_hash)
+    if s2 is s and v2 is v and g2 is g:
+        return list(triples)
+    return list(map(Triple, s2, p, k, v2, lang, dt, line, g2))

@@ -313,6 +313,10 @@ def minhash_lsh_blocking(
 # connected components
 # ---------------------------------------------------------------------------
 
+class ConvergenceError(RuntimeError):
+    """An iterative graph algorithm ran out of rounds before converging."""
+
+
 def connected_components(
     edges: DataFrame,
     src_col: str = "src",
@@ -326,13 +330,17 @@ def connected_components(
     Iterative DataFrame self-join with checkpointing (the exact pattern
     the north rule names). Each round a vertex (1) adopts the minimum
     label among itself and its neighbors, then (2) jumps through its
-    label's label (path compression: L'(v) = min(L(v), L(L(v)))). The
-    jump makes label distance to the component minimum roughly halve per
-    round, so convergence is O(log diameter) rounds instead of
-    O(diameter) — the difference between ~7 and ~40+ shuffles on chainy
-    web-link graphs. Lineage is truncated with ``localCheckpoint`` every
-    ``checkpoint_every`` rounds; the loop exits as soon as a round
-    changes nothing.
+    label's label (path compression: L'(v) = min(L(v), L(L(v)))). One
+    jump per round does NOT halve the label distance to the component
+    minimum: a label's own label is usually stale too, so on a chain
+    whose vertex ids are in random order the minimum moves only a few
+    hops per round and the round count grows with the diameter (a
+    plain-Python replay needed 17 rounds for a 48-vertex chain, 46 for
+    96 and 100 for 160). Lineage is truncated with ``localCheckpoint``
+    every round; the loop exits as soon as a round changes nothing.
+
+    Raises :class:`ConvergenceError` when labels still change in round
+    ``max_iters``: the labels at that point are not the components.
 
     Returns (vertex: string, component: string, component_id: long) where
     ``component`` is the lexicographic minimum vertex of the component and
@@ -387,6 +395,11 @@ def connected_components(
         labels = stepped.drop("_old")
         if changed == 0:
             break
+    else:
+        raise ConvergenceError(
+            f"connected_components did not converge in max_iters={max_iters} "
+            "rounds: labels were still changing in the last round"
+        )
 
     return labels.withColumn("component_id", F.xxhash64("component"))
 

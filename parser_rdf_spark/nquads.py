@@ -14,8 +14,12 @@ document (parse.py) — the same slot-in pattern the raw-html fallback
 uses.
 
 Validation V1-V13 and the escape semantics are shared with
-:mod:`parser_rdf_spark.ntriples` (``allow_graph=True``); graph bnode
-labels are doc-scoped by the shared ``scope_bnodes`` pass.
+:mod:`parser_rdf_spark.ntriples` (``allow_graph=True``): the N-Triples
+document lexer, with an optional IRI / bnode graph term, takes every
+line it can lex, and each line it cannot (a 5-term line, a literal or
+quoted graph term, an IRI escape, a langtag run into the graph term …)
+goes alone to the strict per-line path, ``_parse_lines``. Graph bnode
+labels are doc-scoped by the shared ``scope_columns`` pass.
 """
 
 from __future__ import annotations

@@ -23,7 +23,7 @@ for an EasyRdf limitation) / 29 negative.
 from __future__ import annotations
 
 import re
-from typing import Iterator, NamedTuple, Optional
+from typing import Callable, Iterator, NamedTuple, Optional
 
 MAX_LINE_LENGTH = 1_048_576  # 1 MiB, byte-measured (reference :20)
 
@@ -321,35 +321,37 @@ def validate_document(content: str) -> None:
         validate_line(trimmed, line_num)
 
 
+# one escape per match, left to right, consuming exactly what the W3C
+# grammar does: ECHAR, \uXXXX, \UXXXXXXXX; group 4 is anything else
+_ESCAPE_RE = re.compile(r'\\(?:([tbnrf"\\])|u([0-9A-Fa-f]{4})|U([0-9A-Fa-f]{8})|(.?))', re.DOTALL)
+
+
 def unescape(text: str, line_num: int = 0) -> str:
-    """Decode ECHAR + \\uXXXX/\\UXXXXXXXX escapes (W3C string semantics)."""
+    """Decode ECHAR + \\uXXXX/\\UXXXXXXXX escapes (W3C string semantics).
+
+    Every malformed escape — an unknown ECHAR, a short or non-hex
+    \\u / \\U, a code point past U+10FFFF — raises
+    :class:`NTriplesError` on ``line_num``; the first one in the text
+    wins."""
     if "\\" not in text:
         return text
-    out: list[str] = []
-    i = 0
-    n = len(text)
-    while i < n:
-        ch = text[i]
-        if ch != "\\":
-            out.append(ch)
-            i += 1
-            continue
-        nxt = text[i + 1] if i + 1 < n else ""
-        if nxt in _ECHAR:
-            out.append(_ECHAR[nxt])
-            i += 2
-        elif nxt == "u":
-            out.append(chr(int(text[i + 2 : i + 6], 16)))
-            i += 6
-        elif nxt == "U":
-            cp = int(text[i + 2 : i + 10], 16)
+
+    def decode(m: re.Match) -> str:
+        echar, u4, u8, bad = m.groups()
+        if echar is not None:
+            return _ECHAR[echar]
+        if u4 is not None:
+            return chr(int(u4, 16))
+        if u8 is not None:
+            cp = int(u8, 16)
             if cp > 0x10FFFF:
                 raise NTriplesError(line_num, "code point out of range in \\U escape")
-            out.append(chr(cp))
-            i += 10
-        else:
-            raise NTriplesError(line_num, f"invalid escape sequence '\\{nxt}'")
-    return "".join(out)
+            return chr(cp)
+        if bad in ("u", "U"):
+            raise NTriplesError(line_num, f"invalid \\{bad} escape")
+        raise NTriplesError(line_num, f"invalid escape sequence '\\{bad}'")
+
+    return _ESCAPE_RE.sub(decode, text)
 
 
 def _skip_ws(line: str, i: int) -> int:
@@ -486,40 +488,173 @@ def tokenize_line(line: str, line_num: int, allow_graph: bool = False) -> Option
 
 
 # Document lexer: one regex pass over the WHOLE document, matching one
-# physical line per step — a triple line, a comment line or a blank line.
-# This avoids split("\n")'s per-line string allocations and the per-line
-# trim / comment-scan / validate passes; the parse stage's memory traffic
-# is the 8→32 scaling bottleneck (BENCH/BASELINE.md).
+# physical line per step — a statement line, a comment line or a blank
+# line. This avoids split("\n")'s per-line string allocations and the
+# per-line trim / comment-scan / validate passes; the parse stage's memory
+# traffic is the 8→32 scaling bottleneck (BENCH/BASELINE.md).
 #
-# The triple grammar is a subset of what the strict path accepts, and it
-# tokenizes identically:
-# - IRIs are scheme-led and free of whitespace, '<', '\\', '"' and '_:'
-#   (the V5/V7/V8 checks pass; a '<' would restart the strict path's IRI
-#   extraction, a '"' or '_:' would feed its literal and V9 scans);
+# One template serves every line format: N-Triples, N-Quads (an optional
+# graph term before the dot), N-Triples-star and N-Quads-star (flat
+# ``<< s p o >>`` terms in subject and object position). Each variant's
+# statement grammar is a subset of what that format's strict path accepts,
+# and it tokenizes identically:
+# - IRIs are scheme-led and free of whitespace, '<', '>', '\\' and '"'.
+#   The N-Triples / N-Quads class also excludes '_:' (a '<' would restart
+#   the strict path's IRI extraction, a '"' or '_:' would feed its literal
+#   and V9 scans); the star class instead excludes the rest of the star
+#   tokenizer's banned IRI characters ``{}|^```;
 # - bnode labels have a V9-valid first char and no ':' or '"';
 # - literal bodies hold ECHAR, \uXXXX and \UXXXXXXXX escapes only (the
 #   V10 whitelist) and no '\n' (strict splits lines first, so a literal
 #   spanning a break is unterminated there);
-# - the langtag subpattern IS the V11 grammar;
+# - the langtag subpattern IS the V11 grammar, and it must end where the
+#   strict scanners end a tag (before ' ', '\t', '.' or '>');
 # - leading / trailing php-trim padding and a dot-free trailing comment
 #   are exactly what php_trim and strip_trailing_comment remove.
-# A line it cannot lex (or one long enough to need the byte-measured V1
-# guard) goes alone through the strict path, and the scan resumes on the
-# next line: decisions and first-error line numbers are the strict path's.
-_IRI_F = r'[A-Za-z][A-Za-z0-9+.\-]*:[^<>\s\\"_]*(?:_(?!:)[^<>\s\\"_]*)*'
-_BN_F = r'[A-Za-z0-9_][^\s<>.;,:\\"]*'
-_LIT_F = r'[^"\\\n]*(?:\\(?:[tbnrf"\\]|u[0-9A-Fa-f]{4}|U[0-9A-Fa-f]{8})[^"\\\n]*)*'
-_FAST_DOC = re.compile(
-    r"[ \t\r\x00\x0b]*"
-    rf'(?:(?:<({_IRI_F})>|_:({_BN_F}))'
-    rf'[ \t]*<({_IRI_F})>[ \t]*'
-    rf'(?:<({_IRI_F})>|_:({_BN_F})|"({_LIT_F})"'
-    rf'(?:@([a-zA-Z]+(?:-[a-zA-Z0-9]+)*)|\^\^<({_IRI_F})>)?)'
-    rf'[ \t]*\.[ \t\r\x00\x0b]*(?:#[^\n.]*)?'
-    r"|#[^\n]*"
-    r")?(?:\n|\Z)",
-    re.ASCII,  # match the strict path's non-/u byte semantics for \s
-)
+# Every repetition is possessive (``*+``, Python ≥ 3.11): each one is
+# followed by a character outside its class, so giving characters back
+# could only find a shorter term than the strict scanners take (a bnode
+# ``_:b_`` must never end early as ``_:b`` before a ``_:g`` graph term).
+# A line it cannot lex (a nested quoted triple, one long enough to need
+# the byte-measured V1 guard, anything odd) goes alone through the
+# format's strict path, and the scan resumes on the next line: decisions
+# and first-error line numbers are the strict path's.
+_IRI_F = r'[A-Za-z][A-Za-z0-9+.\-]*+:[^<>\s\\"_]*+(?:_(?!:)[^<>\s\\"_]*+)*+'
+_IRI_STAR_F = r'[A-Za-z][A-Za-z0-9+.\-]*+:[^<>\s\\"{}|^`]*+'
+_BN_F = r'[A-Za-z0-9_][^\s<>.;,:\\"]*+'
+_LIT_F = r'[^"\\\n]*+(?:\\(?:[tbnrf"\\]|u[0-9A-Fa-f]{4}|U[0-9A-Fa-f]{8})[^"\\\n]*+)*+'
+_LANG_F = r"[a-zA-Z]++(?:-[a-zA-Z0-9]++)*+(?=[ \t.>])"
+
+
+class _DocLexer(NamedTuple):
+    """A compiled lexer variant plus the ``m.groups()`` index of each
+    optional part (-1 when the variant lacks it). A node (IRI | bnode)
+    is 2 groups, a literal 3 (body, lang, datatype), a flat quoted term
+    8 (node, predicate, node, literal)."""
+
+    pattern: re.Pattern
+    subj_quoted: int
+    pred: int
+    obj_quoted: int
+    graph: int
+
+
+def _doc_lexer(allow_graph: bool, quoted: bool) -> _DocLexer:
+    iri = _IRI_STAR_F if quoted else _IRI_F
+    node = rf"<({iri})>|_:({_BN_F})"
+    lit = rf'"({_LIT_F})"(?:@({_LANG_F})|\^\^<({iri})>)?'
+    subj, obj = node, f"{node}|{lit}"
+    pred = 2
+    if quoted:
+        term = rf"<<[ \t]*+(?:{node})[ \t]*+<({iri})>[ \t]*+(?:{node}|{lit})[ \t]*+>>"
+        subj, obj = f"{subj}|{term}", f"{obj}|{term}"
+        pred = 10
+    graph = rf"(?:[ \t]*+(?:{node}))?" if allow_graph else ""
+    pattern = re.compile(
+        r"[ \t\r\x00\x0b]*+"
+        rf"(?:(?:{subj})[ \t]*+<({iri})>[ \t]*+(?:{obj}){graph}"
+        r"[ \t]*+\.[ \t\r\x00\x0b]*+(?:#[^\n.]*+)?"
+        r"|#[^\n]*+"
+        r")?(?:\n|\Z)",
+        re.ASCII,  # match the strict path's non-/u byte semantics for \s
+    )
+    obj_quoted = pred + 6 if quoted else -1
+    return _DocLexer(
+        pattern,
+        2 if quoted else -1,
+        pred,
+        obj_quoted,
+        (obj_quoted + 8 if quoted else pred + 6) if allow_graph else -1,
+    )
+
+
+_LEXERS = {(g, q): _doc_lexer(g, q) for g in (False, True) for q in (False, True)}
+
+
+def _quoted_term(g: tuple, i: int, line_num: int, render: Callable[..., str]) -> str:
+    """Render the flat quoted term lexed into groups ``g[i:i+8]``."""
+    s = g[i]
+    if s is None:
+        s = "_:" + g[i + 1]
+    o = g[i + 3]
+    if o is not None:
+        return render(s, g[i + 2], "iri", o)
+    o = g[i + 4]
+    if o is not None:
+        return render(s, g[i + 2], "bnode", "_:" + o)
+    o = g[i + 5]
+    if "\\" in o:
+        o = unescape(o, line_num)
+    return render(s, g[i + 2], "literal", o, g[i + 6], g[i + 7])
+
+
+def lex_document(
+    content: str,
+    allow_graph: bool,
+    strict_lines: Callable[[list[str], int, bool, list[Triple]], None],
+    render_quoted: Optional[Callable[..., str]] = None,
+) -> list[Triple]:
+    """The document lexer loop shared by every line format.
+
+    ``strict_lines(lines, start_idx, allow_graph, triples)`` is the
+    format's per-line strict path; each line the lexer cannot lex goes
+    to it alone. ``render_quoted`` (the star formats) turns on flat
+    ``<< s p o >>`` terms and renders each one from its parts, with
+    :func:`rdfstar.quoted_lexical`'s signature."""
+    pattern, sq, p_ix, oq, g_ix = _LEXERS[allow_graph, render_quoted is not None]
+    o_ix, ob_ix, l_ix = p_ix + 1, p_ix + 2, p_ix + 3
+    triples: list[Triple] = []
+    n = len(content)
+    max_chars = MAX_LINE_LENGTH // 4
+    pos = 0
+    line_idx = 0  # physical lines consumed (1-based line numbers)
+    match = pattern.match
+    append = triples.append
+    new = tuple.__new__  # Triple(...) without its Python-level __new__
+    while pos < n:
+        m = match(content, pos)
+        if m is not None:
+            end = m.end()
+            g = m.groups()
+            pred = g[p_ix]
+            if pred is None:  # blank or comment line
+                line_idx += 1
+                pos = end
+                continue
+            if end - pos <= max_chars:  # else: strict's byte-measured V1
+                line_idx += 1
+                subj = g[0]
+                if subj is None:
+                    subj = g[1]
+                    subj = "_:" + subj if subj is not None else _quoted_term(
+                        g, sq, line_idx, render_quoted)
+                graph = None
+                if g_ix >= 0:
+                    graph = g[g_ix]
+                    if graph is None and g[g_ix + 1] is not None:
+                        graph = "_:" + g[g_ix + 1]
+                obj = g[o_ix]
+                if obj is not None:
+                    t = (subj, pred, "iri", obj, None, None, line_idx, graph)
+                elif g[ob_ix] is not None:
+                    t = (subj, pred, "bnode", "_:" + g[ob_ix], None, None, line_idx, graph)
+                elif (obj := g[l_ix]) is not None:
+                    if "\\" in obj:
+                        obj = unescape(obj, line_idx)
+                    t = (subj, pred, "literal", obj, g[l_ix + 1], g[l_ix + 2], line_idx, graph)
+                else:
+                    obj = _quoted_term(g, oq, line_idx, render_quoted)
+                    t = (subj, pred, "quoted", obj, None, None, line_idx, graph)
+                append(new(Triple, t))
+                pos = end
+                continue
+        eol = content.find("\n", pos)
+        if eol == -1:
+            eol = n
+        strict_lines([content[pos:eol]], line_idx, allow_graph, triples)
+        line_idx += 1
+        pos = eol + 1
+    return triples
 
 
 def _parse_lines(
@@ -551,58 +686,21 @@ def parse_document(content: str, allow_graph: bool = False) -> list[Triple]:
     the caller decides whether that becomes an exception (library API) or
     an ``errors`` row (batch pipeline).
 
-    Two tokenizers, one decision: the document lexer (``_FAST_DOC``)
-    takes every line it can lex, and each line it cannot goes alone
-    through the strict per-line path before the lexer resumes on the
-    next line. The reference validates the whole document before
-    tokenizing any line, but since any error rejects the whole document,
-    per-line validate-then-tokenize produces identical documents-accepted
-    / triples-emitted decisions; only the *reported line number* can
+    Two tokenizers, one decision: the document lexer (:func:`lex_document`)
+    takes every line it can lex — an N-Triples statement, or with
+    ``allow_graph`` (N-Quads) one with an optional IRI / bnode graph term
+    — and each line it cannot (an escape in an IRI, a '_:' or '"' in an
+    IRI, a V9-invalid bnode label, a comment holding a '.', a line over
+    256 Ki characters, any malformed line) goes alone through the strict
+    per-line path before the lexer resumes on the next line. The
+    reference validates the whole document before tokenizing any line,
+    but since any error rejects the whole document, per-line
+    validate-then-tokenize produces identical documents-accepted /
+    triples-emitted decisions; only the *reported line number* can
     differ on documents with both a tokenizer-only and a later validator
-    error. N-Quads (``allow_graph``) lines never lex and take the strict
-    path throughout.
+    error.
     """
-    triples: list[Triple] = []
-    if allow_graph:
-        _parse_lines(content.split("\n"), 0, allow_graph, triples)
-        return triples
-
-    n = len(content)
-    max_chars = MAX_LINE_LENGTH // 4
-    pos = 0
-    line_idx = 0  # physical lines consumed (1-based line numbers)
-    match = _FAST_DOC.match
-    append = triples.append
-    while pos < n:
-        m = match(content, pos)
-        if m is not None:
-            end = m.end()
-            g = m.groups()
-            if g[2] is None:  # blank or comment line
-                line_idx += 1
-                pos = end
-                continue
-            if end - pos <= max_chars:  # else: strict's byte-measured V1
-                line_idx += 1
-                subj = g[0] if g[0] is not None else "_:" + g[1]
-                if g[3] is not None:
-                    append(Triple(subj, g[2], "iri", g[3], None, None, line_idx))
-                elif g[4] is not None:
-                    append(Triple(subj, g[2], "bnode", "_:" + g[4], None, None, line_idx))
-                else:
-                    v = g[5]
-                    if "\\" in v:
-                        v = unescape(v, line_idx)
-                    append(Triple(subj, g[2], "literal", v, g[6], g[7], line_idx))
-                pos = end
-                continue
-        eol = content.find("\n", pos)
-        if eol == -1:
-            eol = n
-        _parse_lines([content[pos:eol]], line_idx, False, triples)
-        line_idx += 1
-        pos = eol + 1
-    return triples
+    return lex_document(content, allow_graph, _parse_lines)
 
 
 def iter_resources(triples: list[Triple]) -> Iterator[str]:

@@ -151,17 +151,19 @@ def _parse_batch(
     for i in range(n):
         res = parse_page(texts[i], htmls[i], fmt, empty_guard)
         triples = res.triples
-        if scope and triples:
-            triples = _formats.scope_bnodes(triples, doc_hash(urls[i]))
-        for t in triples:
-            subj.append(t.subj)
-            pred.append(t.pred)
-            obj_kind.append(t.obj_kind)
-            obj_value.append(t.obj_value)
-            obj_lang.append(t.obj_lang)
-            obj_datatype.append(t.obj_datatype)
-            line_no.append(t.line_no)
-            graph_term.append(t.graph)
+        if triples:
+            # column-wise flatten; bnode scoping (P5) runs on the columns
+            s, p, k, v, lang, dt, ln, g = zip(*triples)
+            if scope:
+                s, v, g = _formats.scope_columns(s, k, v, g, doc_hash(urls[i]))
+            subj += s
+            pred += p
+            obj_kind += k
+            obj_value += v
+            obj_lang += lang
+            obj_datatype += dt
+            line_no += ln
+            graph_term += g
         offsets.append(len(subj))
         formats[i] = res.format
         if res.ok:

@@ -52,6 +52,7 @@ from .ntriples import (
     _LANGTAG_RE,
     _SCHEME_RE,
     _skip_ws,
+    lex_document,
     php_trim,
     strip_trailing_comment,
     unescape,
@@ -267,17 +268,18 @@ def tokenize_line_star(
     return Triple(subj, pred, o_kind, obj, lang, dt, line_num, graph)
 
 
-def parse_document(content: str, allow_graph: bool = False) -> list[Triple]:
-    """Full strict N-Triples-star parse (V1 line guard + V13 comment
-    strip + the star grammar); ``allow_graph=True`` = N-Quads-star.
-    First offending line raises."""
-    triples: list[Triple] = []
+def _parse_lines_star(
+    lines: list[str], start_idx: int, allow_graph: bool, triples: list[Triple]
+) -> None:
+    """Per-line strict star path: V1 line guard, V13 comment strip, then
+    :func:`tokenize_line_star`. ``start_idx`` = physical lines already
+    consumed, so reported line numbers stay document-absolute."""
     max_chars = MAX_LINE_LENGTH // 4
-    for idx, raw in enumerate(content.split("\n")):
+    for idx, raw in enumerate(lines):
         trimmed = php_trim(raw)
         if not trimmed or trimmed[0] == "#":
             continue
-        line_num = idx + 1
+        line_num = start_idx + idx + 1
         if len(raw) > max_chars and len(raw.encode("utf-8", "surrogatepass")) > MAX_LINE_LENGTH:
             raise NTriplesError(line_num, "line exceeds maximum length")
         t = tokenize_line_star(
@@ -285,7 +287,22 @@ def parse_document(content: str, allow_graph: bool = False) -> list[Triple]:
         )
         if t is not None:
             triples.append(t)
-    return triples
+
+
+def parse_document(content: str, allow_graph: bool = False) -> list[Triple]:
+    """Full strict N-Triples-star parse (V1 line guard + V13 comment
+    strip + the star grammar); ``allow_graph=True`` = N-Quads-star.
+    First offending line raises.
+
+    The N-Triples document lexer (:func:`ntriples.lex_document`, star
+    variant) takes every statement whose quoted terms are flat
+    (``<< s p o >>`` with no quoted triple inside) and renders each with
+    :func:`quoted_lexical`. A line it cannot lex — a nested quoted
+    triple, an IRI escape or an IRI character the star grammar bans, a
+    bnode label or langtag outside the lexer's classes, a line over
+    256 Ki characters, any malformed line — goes alone to
+    :func:`tokenize_line_star`, and lexing resumes on the next line."""
+    return lex_document(content, allow_graph, _parse_lines_star, quoted_lexical)
 
 
 def can_handle(content: str) -> bool:
@@ -348,7 +365,10 @@ def can_handle_quads(content: str) -> bool:
 def rescope_quoted(lexical: str, doc_hash: str) -> str:
     """P5 for quoted terms: rewrite every ``_:label`` INSIDE a quoted
     lexical form to ``_:d{doc_hash}-label`` (literal bodies untouched —
-    the rewrite re-parses the term, it does not regex the string)."""
+    the rewrite re-parses the term, it does not regex the string). A
+    term holding no ``_:`` has no bnode to rewrite and is returned as is."""
+    if "_:" not in lexical:
+        return lexical
     s_kind, s, p, o_kind, o, o_lang, o_dt = parse_quoted(lexical)
     if s_kind == "bnode":
         s = f"_:d{doc_hash}-{s[2:]}"

@@ -31,7 +31,15 @@ def build_session(
     of single-core work — terrible parallelism and straggler exposure.
     16 MiB ≈ a few seconds per task. ``openCostInBytes`` is lowered in
     step so many small parquet files don't bin-pack into a handful of
-    scan partitions (the default 4 MiB padding swamps sub-MB files)."""
+    scan partitions (the default 4 MiB padding swamps sub-MB files).
+
+    ``spark.python.sql.dataFrameDebugging.enabled`` is off: with it on
+    (PySpark 4.1's default) every DataFrame / Column call first captures
+    the Python call site, then sets and clears it in the JVM — about
+    twice the Py4J round trips when planning a SPARQL query. The cost is
+    the DataFrame query context (the Python line of the failing call)
+    in analysis-error messages; pass it back on via ``extra_conf`` when
+    debugging a plan."""
     master = master or os.environ.get("SPARK_GRAFT_MASTER", "local[*]")
     builder = SparkSession.builder.appName(app_name)
     if master != "submit":
@@ -51,6 +59,7 @@ def build_session(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

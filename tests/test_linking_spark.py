@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from parser_rdf_spark.linking import (
+    ConvergenceError,
     canonicalize_triples,
     connected_components,
     link_entities,
@@ -219,6 +220,16 @@ def test_connected_components_long_chain_converges(spark):
     out = connected_components(edges, max_iters=100, checkpoint_every=5)
     comps = {r.component for r in out.collect()}
     assert comps == {"v000"}
+
+
+def test_connected_components_raises_when_rounds_run_out(spark):
+    # a 40-edge chain needs far more than 3 rounds: returning the
+    # round-3 labels would split the chain into wrong components
+    edges = spark.createDataFrame(
+        [(f"v{i:03d}", f"v{i+1:03d}") for i in range(40)], "src string, dst string"
+    )
+    with pytest.raises(ConvergenceError, match="max_iters=3 rounds"):
+        connected_components(edges, max_iters=3)
 
 
 def test_minhash_lsh_blocks_near_duplicates(spark):

@@ -7,6 +7,7 @@ limitation); our tokenizer parses it, which is spec-correct.
 """
 
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from parser_rdf_spark import w3c_fixtures as w3c
 from parser_rdf_spark.ntriples import (
@@ -133,3 +134,90 @@ def test_resource_count_matches_reference_semantics():
         '_:b <http://e/p> <http://e/s> .\n'
     )
     assert resource_count(ts) == 3  # s, o, _:b
+
+
+@pytest.mark.parametrize("bad", [
+    "\\u12", "\\u12G4", "\\u 12a", "\\u+12a", "\\u1_2a",
+    "\\U0001F60", "\\U0001F60Z", "\\U 001F600",
+])
+def test_unescape_short_or_nonhex_escape_raises_on_its_line(bad):
+    with pytest.raises(NTriplesError) as e:
+        unescape("x" + bad + '"', 7)
+    assert e.value.line_num == 7
+
+
+def test_bad_escape_behind_a_quoted_iri_is_a_validate_error():
+    # _scan_iri ends the IRI at the first '>' while V6 restarts it at
+    # every '<', so V8 never sees this IRI's '\u12""' escape: unescape
+    # itself must reject it with the line number
+    from parser_rdf_spark.formats import parse_rdf_document
+
+    doc = '<a:s> <a:p> <" . "\\u12""a.b"<a:\\u0041> .'
+    with pytest.raises(NTriplesError) as e:
+        parse_document(doc)
+    assert e.value.line_num == 1
+    res = parse_rdf_document(doc, "n-triples")
+    assert (res.error_stage, res.error_line) == ("validate", 1)
+
+
+@pytest.mark.parametrize("line", [
+    '<a:s> <a:p> "\\u12" .',
+    '<a:s> <a:p> <a:\\u12x> .',
+    '<< <a:s> <a:p> "\\U0001F60" >> <a:p> <a:o> .',
+])
+def test_star_path_bad_escape_is_a_validate_error(line):
+    # the star tokenizer calls the same unescape (it has no V8/V10 pass)
+    from parser_rdf_spark import rdfstar
+    from parser_rdf_spark.formats import parse_rdf_document
+
+    with pytest.raises(NTriplesError) as e:
+        rdfstar.parse_document("<a:s> <a:p> <a:o> .\n" + line)
+    assert e.value.line_num == 2
+    res = parse_rdf_document(line, "ntriples-star")
+    assert (res.error_stage, res.error_line) == ("validate", 1)
+
+
+def unescape_loop(text: str, line_num: int = 0) -> str:
+    """Reference: the character loop unescape was before it became one
+    regex substitution (plus the short / non-hex \\u, \\U check)."""
+    hexdigits = set("0123456789abcdefABCDEF")
+    echar = {"t": "\t", "b": "\b", "n": "\n", "r": "\r", "f": "\f", '"': '"', "\\": "\\"}
+    out, i, n = [], 0, len(text)
+    while i < n:
+        if text[i] != "\\":
+            out.append(text[i])
+            i += 1
+            continue
+        nxt = text[i + 1] if i + 1 < n else ""
+        if nxt in echar:
+            out.append(echar[nxt])
+            i += 2
+        elif nxt in ("u", "U"):
+            width = 4 if nxt == "u" else 8
+            digits = text[i + 2 : i + 2 + width]
+            if len(digits) < width or not all(c in hexdigits for c in digits):
+                raise NTriplesError(line_num, f"invalid \\{nxt} escape")
+            cp = int(digits, 16)
+            if cp > 0x10FFFF:
+                raise NTriplesError(line_num, "code point out of range in \\U escape")
+            out.append(chr(cp))
+            i += 2 + width
+        else:
+            raise NTriplesError(line_num, f"invalid escape sequence '\\{nxt}'")
+    return "".join(out)
+
+
+def _unescape_outcome(fn, text):
+    try:
+        return fn(text, 3)
+    except NTriplesError as e:
+        return ("err", str(e), e.line_num)
+
+
+@settings(max_examples=500, deadline=None)
+@given(st.lists(st.sampled_from(
+    list('\\tbnrf"uU0123456789abcdefABCDEF xz\n\x00é+_-')
+    + ["\\u", "\\U", "\\U0010", "\\U0011", "\\uD800", "\\\\"]), max_size=16))
+def test_unescape_matches_character_loop(parts):
+    text = "".join(parts)
+    assert _unescape_outcome(unescape, text) == _unescape_outcome(unescape_loop, text)
