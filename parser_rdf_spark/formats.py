@@ -17,6 +17,7 @@ text column through the JVM↔Python boundary twice.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from itertools import repeat
 from typing import Callable, Optional, Sequence
 
 from . import htmldata, jsonld, nquads, ntriples, rdfstar, rdfxml, trig, turtle
@@ -295,4 +296,6 @@ def scope_bnodes(triples: list[Triple], doc_hash: str) -> list[Triple]:
     s2, v2, g2 = scope_columns(s, k, v, g, doc_hash)
     if s2 is s and v2 is v and g2 is g:
         return list(triples)
-    return list(map(Triple, s2, p, k, v2, lang, dt, line, g2))
+    # tuple.__new__ builds each Triple without its Python-level __new__
+    rows = zip(s2, p, k, v2, lang, dt, line, g2)
+    return list(map(tuple.__new__, repeat(Triple), rows))

@@ -544,11 +544,9 @@ def _doc_lexer(allow_graph: bool, quoted: bool) -> _DocLexer:
     node = rf"<({iri})>|_:({_BN_F})"
     lit = rf'"({_LIT_F})"(?:@({_LANG_F})|\^\^<({iri})>)?'
     subj, obj = node, f"{node}|{lit}"
-    pred = 2
     if quoted:
         term = rf"<<[ \t]*+(?:{node})[ \t]*+<({iri})>[ \t]*+(?:{node}|{lit})[ \t]*+>>"
         subj, obj = f"{subj}|{term}", f"{obj}|{term}"
-        pred = 10
     graph = rf"(?:[ \t]*+(?:{node}))?" if allow_graph else ""
     pattern = re.compile(
         r"[ \t\r\x00\x0b]*+"
@@ -558,13 +556,13 @@ def _doc_lexer(allow_graph: bool, quoted: bool) -> _DocLexer:
         r")?(?:\n|\Z)",
         re.ASCII,  # match the strict path's non-/u byte semantics for \s
     )
-    obj_quoted = pred + 6 if quoted else -1
+    pred = 10 if quoted else 2  # after the subject's node (+ quoted term)
     return _DocLexer(
         pattern,
         2 if quoted else -1,
         pred,
-        obj_quoted,
-        (obj_quoted + 8 if quoted else pred + 6) if allow_graph else -1,
+        pred + 6 if quoted else -1,  # after the object's node and literal
+        pattern.groups - 2 if allow_graph else -1,  # the graph node is last
     )
 
 
