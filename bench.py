@@ -63,12 +63,29 @@ def _load() -> list[float]:
     return [round(x, 2) for x in os.getloadavg()]
 
 
+def _mem_available_mb() -> float | None:
+    """``MemAvailable`` from /proc/meminfo (read-only); None off Linux."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    return round(int(line.split()[1]) / 1024.0, 1)
+    except OSError:
+        pass
+    return None
+
+
 def _row(queries: dict, loads: dict, name: str, fn, n: int = None) -> None:
     """Time one ``queries`` row (best-of) and record the host's
-    1/5/15-minute load averages before and after it in ``loads``."""
-    before = _load()
+    1/5/15-minute load averages and available memory before and after
+    it in ``loads``."""
+    before, mem_before = _load(), _mem_available_mb()
     queries[name] = _best_of(fn, n)
-    loads[name] = {"before": before, "after": _load()}
+    loads[name] = {
+        "before": before,
+        "after": _load(),
+        "mem_available_mb": {"before": mem_before, "after": _mem_available_mb()},
+    }
 
 
 def _pages_cache(spark, n_docs: int, cpus: int):
@@ -405,7 +422,8 @@ def main() -> None:
                 "best_of": BEST_OF,
                 "components_converged": components_converged,
                 # host readings: the CPU count and, per queries row, the
-                # 1/5/15-minute load averages before and after it
+                # 1/5/15-minute load averages and MemAvailable (MB)
+                # before and after it
                 "host": {"cpu_count": os.cpu_count(), "load": loads},
             }
         )

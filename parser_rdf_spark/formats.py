@@ -8,7 +8,7 @@ wins, priority order JSON-LD → Turtle → N-Triples → RDF/XML; an explicit
 ``registerHandler`` ``array_unshift``.
 
 Everything here is pure Python: the Spark pipeline wraps these functions
-in ONE fused Arrow-batched ``mapInPandas`` stage (parser_rdf_spark.parse),
+in ONE fused Arrow-batched ``mapInArrow`` stage (parser_rdf_spark.parse),
 so detection, validation, parsing, and per-doc prefix extraction make a
 single pass over the page text — at 100 TB you never want to ship the
 text column through the JVM↔Python boundary twice.

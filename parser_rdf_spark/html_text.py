@@ -8,20 +8,15 @@ exact inverse is: take the raw inner bytes of the first ``<pre>`` block.
 For pages without a ``<pre>`` block we fall back to a generic
 tag-strip + entity-decode path (used by the non-RDF filler class).
 
-Implementation is a vectorized pandas transformation inside
-``mapInPandas`` — regex over a pandas string Series, no per-row Python
-function calls on the hot path.
+:func:`html_bytes_to_text` is the per-document rule; the fused parse
+stage (``parse.parse_page``, inside the one ``mapInArrow`` pass) calls it
+for every page whose ``text`` is null.
 """
 
 from __future__ import annotations
 
 import html as _html
 import re
-from typing import Iterator
-
-import pandas as pd
-
-from pyspark.sql import DataFrame
 
 _PRE_RE = re.compile(rb"<pre>(.*?)</pre>", re.DOTALL)
 _TAG_RE = re.compile(r"<[^>]+>")
@@ -38,17 +33,3 @@ def html_bytes_to_text(payload: bytes | None) -> str | None:
     text = payload.decode("utf-8", errors="replace")
     return _html.unescape(_TAG_RE.sub("", text))
 
-
-def extract_text(pages: DataFrame) -> DataFrame:
-    """pages(url, warc_ts, html, …) → same schema with ``text`` filled from
-    ``html`` wherever ``text`` is null. Pages that already carry text keep
-    it verbatim (the byte-identity invariant)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            need = pdf["text"].isna() & pdf["html"].notna()
-            if need.any():
-                pdf.loc[need, "text"] = pdf.loc[need, "html"].map(html_bytes_to_text)
-            yield pdf
-
-    return pages.mapInPandas(batches, schema=pages.schema)

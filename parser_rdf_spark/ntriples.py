@@ -1,7 +1,7 @@
 """Strict W3C N-Triples detection, validation, and tokenization.
 
 Pure-Python, per-document functions designed to run *vectorized across
-documents* inside an Arrow-batched ``mapInPandas`` stage (see
+documents* inside the Arrow-batched ``mapInArrow`` stage (see
 ``parser_rdf_spark.parse``). No Spark imports here so the semantics are
 unit-testable in isolation.
 

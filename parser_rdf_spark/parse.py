@@ -74,9 +74,10 @@ def parse_page(
     res = _formats.parse_rdf_document(
         text if isinstance(text, str) else "", fmt, empty_guard=empty_guard
     )
-    if res.error_stage == "format_detection" and fmt is None and html is not None:
-        # the tag-stripped text isn't RDF, but the raw HTML may still
-        # carry structured data (microdata / RDFa / embedded JSON-LD)
+    if res.error_stage in ("format_detection", "empty") and fmt is None and html is not None:
+        # the (tag-stripped) text is empty or isn't RDF, but the raw HTML
+        # may still carry structured data (microdata / RDFa / embedded
+        # JSON-LD); without any, the original error stands
         raw = bytes(html).decode("utf-8", errors="replace")
         if _htmldata.can_handle(raw):
             res = _formats.parse_rdf_document(raw, "html", empty_guard=empty_guard)

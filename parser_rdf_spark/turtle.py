@@ -22,7 +22,7 @@ N-Triples-star input identically. TriG inherits all of this
 star-format matrix.
 
 Recursive-descent over the document string — per-document sequential by
-nature, vectorized *across* documents by the calling ``mapInPandas`` stage.
+nature, vectorized *across* documents by the calling ``mapInArrow`` stage.
 """
 
 from __future__ import annotations

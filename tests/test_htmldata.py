@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from parser_rdf_spark import htmldata
 from parser_rdf_spark.formats import detect_format, parse_rdf_document, supported_formats
-from parser_rdf_spark.parse import parse_pages, triples_of
+from parser_rdf_spark.parse import parse_page, parse_pages, triples_of
 from parser_rdf_spark.schemas import PAGES
 
 SCHEMA = "https://schema.org/"
@@ -157,6 +157,30 @@ def test_malformed_html_never_raises():
 def test_plain_text_not_detected_as_html():
     assert not htmldata.can_handle("just a plain sentence with no tags")
     assert detect_format("just a plain sentence") is None
+
+
+@pytest.mark.parametrize("text", [None, "hello", "", "   "])
+def test_raw_html_fallback_for_empty_text(text):
+    """An empty ``text`` column is no reason to drop the page's HTML
+    structured data: it falls back to the raw bytes like non-RDF text."""
+    html = (
+        b'<html><head><script type="application/ld+json">'
+        b'{"@id": "https://example.org/a", "https://example.org/p": "v"}'
+        b"</script></head><body>hello</body></html>"
+    )
+    res = parse_page(text, html)
+    assert res.ok and res.format == "html"
+    assert _spo(res.triples) == {("https://example.org/a", "https://example.org/p", "v")}
+
+
+@pytest.mark.parametrize("text", ["", "   "])
+def test_empty_text_falls_back_like_non_rdf_text(text):
+    """Without HTML the reference-pinned 'empty' error stays; with HTML
+    an empty text gets the same result as a non-RDF one."""
+    res = parse_page(text, None)
+    assert (res.format, res.error_stage, res.triples) == (None, "empty", [])
+    html = b"<html><body><p>no structured data</p></body></html>"
+    assert parse_page(text, html) == parse_page("hello", html)
 
 
 def _html_pages(spark, docs):
