@@ -1,6 +1,6 @@
 """Stage 4: graph materialization — edge/vertex tables partitioned by
 predicate bucket, per-partition lineage + triple-count metrics, and
-checkpoint/resume via a processed-bucket high-water-mark table.
+checkpoint/resume from snapshot commits.
 
 Storage abstraction (SURVEY.md §7 step 7): this sandbox has no Iceberg
 runtime jar, so tables are partitioned Parquet with an Iceberg-identical
@@ -9,20 +9,21 @@ layout (``pred_bucket = pmod(xxhash64(pred), N)`` ≙ Iceberg
 deployment would swap in ``df.writeTo(...)`` against an Iceberg catalog.
 
 Resume model (north rule: "resumable from checkpoint"): input pages are
-split into ``url_bucket = pmod(xxhash64(url), B)`` work units. Each fully
-written bucket is recorded in ``<root>/_checkpoints/processed_buckets``
-(one commit per bucket, written AFTER the bucket's data lands — at-least-
-once, idempotent because a re-run overwrites the same deterministic
-partition directories). A killed job re-runs only unrecorded buckets.
+split into ``url_bucket = pmod(xxhash64(url), B)`` work units. A bucket
+is done when its ``append-bucket`` snapshot commit lands, AFTER its data:
+each manifest lists the buckets its data includes, and that commit is the
+one record (and the one point of visibility) of the bucket. A kill before
+the commit re-runs the bucket — idempotent, because a re-run overwrites
+the same deterministic partition directories; a kill after it skips it.
 """
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import json
 import os
 import shutil
-import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -160,27 +161,10 @@ class GraphWriter:
             with open(cfg_path, "w") as f:
                 json.dump({"url_buckets": url_buckets, "pred_buckets": pred_buckets}, f)
 
-    # -- checkpoint bookkeeping (tiny driver-side JSON lines; an Iceberg
-    # deployment would use snapshot metadata instead) --------------------
-    @property
-    def _processed_path(self) -> str:
-        return os.path.join(self._ckpt_dir, "processed_buckets.jsonl")
-
+    # -- checkpoint: the current snapshot's bucket list --------------------
     def processed_buckets(self) -> set[int]:
-        done: set[int] = set()
-        if os.path.exists(self._processed_path):
-            with open(self._processed_path) as f:
-                for line in f:
-                    rec = json.loads(line)
-                    done.add(rec["url_bucket"])
-        return done
-
-    def _mark_processed(self, bucket: int, run_id: str, n_triples: int) -> None:
-        with open(self._processed_path, "a") as f:
-            f.write(json.dumps({
-                "url_bucket": bucket, "run_id": run_id,
-                "n_triples": n_triples, "ts": time.time(),
-            }) + "\n")
+        """Url buckets whose data the current snapshot includes."""
+        return set(self.snapshots.buckets())
 
     # -- input staging ----------------------------------------------------
     def _stage_pages(self, spark: SparkSession, pages: DataFrame) -> DataFrame:
@@ -374,7 +358,7 @@ class GraphWriter:
             )
 
             # metrics partitioned+overwritten per url_bucket: a crash
-            # between this write and _mark_processed re-runs the bucket,
+            # between this write and the bucket's commit re-runs the bucket,
             # and dynamic overwrite replaces (not duplicates) its rows
             metrics = partition_metrics(edges, "edges", "pred", run_id)
             (
@@ -386,23 +370,25 @@ class GraphWriter:
             )
             edges.unpersist()
 
-            self._mark_processed(b, run_id, n)
-            # snapshot AFTER the bucket checkpoint: the manifest lists the
-            # exact table files on disk now. Earlier buckets' partition
-            # dirs are never rewritten (dynamic overwrite only touches
-            # url_bucket=b, and b is processed at most once per root), so
-            # older manifests stay valid — time travel to any bucket
-            # boundary. An uncommitted (crashed) bucket's files are in no
-            # manifest and get replaced invisibly on re-run.
+            # the commit is the one record that bucket b is done: the
+            # manifest lists the exact table files on disk now and the
+            # buckets they hold. Earlier buckets' partition dirs are never
+            # rewritten (dynamic overwrite only touches url_bucket=b, and
+            # b is committed at most once per root), so older manifests
+            # stay valid — time travel to any bucket boundary. An
+            # uncommitted (crashed) bucket's files are in no manifest and
+            # get replaced invisibly on re-run.
             self.snapshots.commit(
                 self._table_files(),
                 "append-bucket",
                 {"url_bucket": b, "run_id": run_id, "n_triples": n},
+                buckets=done | {b},
             )
+            done.add(b)
             total_triples += n
             processed += 1
 
-        if len(self.processed_buckets()) == self.url_buckets:
+        if len(done) == self.url_buckets:
             self._cleanup_staging()
         return RunResult(run_id, self.url_buckets, processed, skipped, total_triples)
 
@@ -581,6 +567,10 @@ class GraphWriter:
                     p = os.path.join(dirpath, n)
                     if n.endswith(".parquet") and os.path.relpath(p, self.root) not in surviving:
                         os.remove(p)
+                        # Spark's checksum sidecar; left behind, it keeps
+                        # the partition dir from ever emptying
+                        with contextlib.suppress(FileNotFoundError):
+                            os.remove(os.path.join(dirpath, f".{n}.crc"))
                 if dirpath != tdir and not os.listdir(dirpath):
                     os.rmdir(dirpath)
         return expired

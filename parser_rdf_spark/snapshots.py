@@ -47,7 +47,10 @@ _SNAP_RE = re.compile(r"^snap-(\d+)\.json$")
 class ManifestLog:
     """The bare commit log: numbered immutable manifests + an atomic
     current pointer. Knows nothing about data files' contents — callers
-    decide what a manifest's ``files`` list means."""
+    decide what a manifest's ``files`` list means. A manifest's
+    ``buckets`` field is the sorted list of url buckets whose data the
+    snapshot includes (GraphWriter's one record that a bucket is done);
+    a commit that passes no list inherits the parent's."""
 
     def __init__(self, meta_dir: str):
         self.meta_dir = meta_dir
@@ -129,7 +132,13 @@ class ManifestLog:
             )
         return sorted(expired)
 
-    def commit(self, files: list[str], operation: str, summary: dict | None = None) -> int:
+    def buckets(self) -> list[int]:
+        """The current snapshot's ``buckets`` list ([] before any commit)."""
+        cur = self.current_id()
+        return [] if cur is None else self.manifest(cur).get("buckets", [])
+
+    def commit(self, files: list[str], operation: str, summary: dict | None = None,
+               buckets: set[int] | None = None) -> int:
         snap_id = self.next_id()
         self.atomic_json(
             os.path.join(self.meta_dir, f"snap-{snap_id}.json"),
@@ -139,6 +148,7 @@ class ManifestLog:
                 "operation": operation,
                 "summary": summary or {},
                 "files": files,
+                "buckets": sorted(self.buckets() if buckets is None else buckets),
             },
         )
         self.atomic_json(self._pointer_path(), {"snapshot_id": snap_id})
@@ -246,24 +256,11 @@ class SnapshotTable:
         )
 
     def expire_snapshots(self, keep_last: int = 1) -> list[int]:
-        """Drop all but the last ``keep_last`` reachable snapshots, plus
-        orphans older than the kept window, and delete data directories
-        no surviving manifest references (the vacuum that keeps storage
-        bounded at scale). Returns expired snapshot ids."""
-        if keep_last < 1:
-            raise ValueError("keep_last must be >= 1")
-        hist = self.log.history()
-        keep, drop = hist[-keep_last:], hist[:-keep_last]
-        kept_ids = {m["snapshot_id"] for m in keep}
-        reachable = {m["snapshot_id"] for m in hist}
-        expired = [m["snapshot_id"] for m in drop]
-        expired += [
-            sid for sid in self.log.manifest_ids()
-            if sid not in reachable and sid < min(kept_ids, default=0)
-        ]
-        for sid in expired:
-            os.remove(os.path.join(self.log.meta_dir, f"snap-{sid}.json"))
-
+        """Expire snapshots via :meth:`ManifestLog.expire`, then delete
+        data directories no surviving manifest references (the vacuum
+        that keeps storage bounded at scale). Returns expired snapshot
+        ids."""
+        expired = self.log.expire(keep_last)
         surviving_files = {
             f for sid in self.log.manifest_ids() for f in self.manifest(sid)["files"]
         }
@@ -274,13 +271,4 @@ class SnapshotTable:
         for d in os.listdir(self._data):
             if d not in live_dirs:
                 shutil.rmtree(os.path.join(self._data, d), ignore_errors=True)
-
-        # relink kept parents so history() never walks into an expired id
-        for i, m in enumerate(keep):
-            parent = keep[i - 1]["snapshot_id"] if i > 0 else None
-            if m["parent_id"] != parent:
-                self.log.atomic_json(
-                    os.path.join(self.log.meta_dir, f"snap-{m['snapshot_id']}.json"),
-                    dict(m, parent_id=parent),
-                )
-        return sorted(expired)
+        return expired

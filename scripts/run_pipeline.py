@@ -9,7 +9,7 @@ entry point the north rule names.
 
 Stages (SURVEY.md §1.3 / BASELINE.json north_star):
   1+2  HTML→text + detect/validate/parse (fused mapInArrow), bucket-by-
-       bucket with high-water-mark resume, edges partitioned by
+       bucket with snapshot-commit resume, edges partitioned by
        (url_bucket, pred_bucket), per-partition lineage metrics
        — all inside :class:`parser_rdf_spark.materialize.GraphWriter`.
   2.5  ontology extraction: classes/properties/shapes/prefixes tables.
@@ -19,8 +19,8 @@ Stages (SURVEY.md §1.3 / BASELINE.json north_star):
   4    vertices table labelled with component ids.
 
 ``--fail-after N`` simulates a mid-job kill after N buckets; re-running
-the same command resumes from the recorded high-water mark (the driver
-prints how many buckets were skipped). Exit code 0 only when every
+the same command resumes from the last bucket snapshot commit (the
+summary line counts the buckets skipped). Exit code 0 only when every
 bucket is processed.
 
 Prints ONE JSON line with the run summary.

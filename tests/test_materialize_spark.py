@@ -271,6 +271,13 @@ def test_compact_rewrites_identically_and_expire_reclaims(spark, tmp_path):
     assert w.table_at(spark, "triples").count() == 32
     # history never walks into an expired manifest
     assert [m["snapshot_id"] for m in w.snapshots.history()] == [cur]
+    # the vacuum takes each deleted file's checksum sidecar with it
+    import os
+    orphan_crcs = [
+        os.path.join(d, n) for d, _, names in os.walk(root) for n in names
+        if n.startswith(".") and n.endswith(".crc") and n[1:-4] not in names
+    ]
+    assert orphan_crcs == []
 
 
 def test_kill_resume_across_compaction_boundary(spark, tmp_path):
@@ -298,3 +305,52 @@ def test_kill_resume_across_compaction_boundary(spark, tmp_path):
     assert res3.buckets_processed == 0 and res3.buckets_skipped == 4
     assert w.edges(spark).count() == 16
     assert w.table_at(spark, "edges").count() == 16
+
+
+def test_kill_between_bucket_writes_and_commit_loses_nothing(spark, tmp_path, monkeypatch):
+    """A kill after the last bucket's table writes and before its snapshot
+    commit must re-run that bucket on resume: the commit is the only
+    record that a bucket is done, so the manifest, the directory readers
+    and the post-maintenance vacuum all agree on every row."""
+    pages = pages_df(spark, _docs(16))
+    w = GraphWriter(str(tmp_path / "gw"), url_buckets=4)
+    commit, calls = w.snapshots.commit, []
+
+    def commit_killed_on_last_bucket(*args, **kwargs):
+        calls.append(args[1])
+        if len(calls) == 4:
+            raise RuntimeError("killed before commit")
+        return commit(*args, **kwargs)
+
+    monkeypatch.setattr(w.snapshots, "commit", commit_killed_on_last_bucket)
+    with pytest.raises(RuntimeError, match="killed before commit"):
+        w.run(spark, pages, run_id="r1")
+    assert calls == ["append-bucket"] * 4
+    assert w.processed_buckets() == {0, 1, 2}
+
+    res = w.run(spark, pages, run_id="r2")
+    assert res.buckets_processed == 1 and res.buckets_skipped == 3
+    for table in GraphWriter.TABLES:
+        w.compact(spark, table)
+    w.expire_snapshots(keep_last=1)
+    assert w.triples(spark).count() == 32
+    assert w.table_at(spark, "triples").count() == 32
+    assert w.table_at(spark, "edges").count() == 16
+
+
+def test_foreign_commit_keeps_the_bucket_list(spark, tmp_path):
+    """A commit made outside the bucket loop (the pipeline's and the
+    benchmark sweep's global-metrics commit, compaction) passes no bucket
+    list and inherits its parent's, so a completed run stays complete
+    across it, across compaction and across expiry."""
+    pages = pages_df(spark, _docs(16))
+    w = GraphWriter(str(tmp_path / "gf"), url_buckets=4)
+    w.run(spark, pages, run_id="r1")
+    w.snapshots.commit(w._table_files(), "append-global-metrics", {"run_id": "r1"})
+    for table in GraphWriter.TABLES:
+        w.compact(spark, table)
+    w.expire_snapshots(keep_last=1)
+    assert w.processed_buckets() == {0, 1, 2, 3}
+    res = w.run(spark, pages, run_id="r2")
+    assert res.buckets_processed == 0 and res.buckets_skipped == 4
+    assert w.table_at(spark, "triples").count() == 32
