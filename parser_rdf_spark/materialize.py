@@ -15,11 +15,15 @@ each manifest lists the buckets its data includes, and that commit is the
 one record (and the one point of visibility) of the bucket. A kill before
 the commit re-runs the bucket — idempotent, because a re-run overwrites
 the same deterministic partition directories; a kill after it skips it.
+
+The manifest is also the one record of a table's files: every reader
+reads the current manifest's file list, each commit republishes it plus
+the partition directories a write has just created or replaced, and
+expiry deletes whatever no kept manifest lists.
 """
 
 from __future__ import annotations
 
-import contextlib
 import hashlib
 import json
 import os
@@ -28,6 +32,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .snapshots import ManifestLog, expire_and_vacuum, list_parquet, read_snapshot
 
 DEFAULT_PRED_BUCKETS = 64
 
@@ -132,8 +138,6 @@ class GraphWriter:
     TABLES = ("triples", "edges", "docmeta", "metrics", "terms")
 
     def __init__(self, root: str, url_buckets: int = 8, pred_buckets: int = DEFAULT_PRED_BUCKETS):
-        from .snapshots import ManifestLog
-
         self.root = root
         self.url_buckets = url_buckets
         self.pred_buckets = pred_buckets
@@ -371,13 +375,13 @@ class GraphWriter:
             edges.unpersist()
 
             # the commit is the one record that bucket b is done: the
-            # manifest lists the exact table files on disk now and the
-            # buckets they hold. Earlier buckets' partition dirs are never
-            # rewritten (dynamic overwrite only touches url_bucket=b, and
-            # b is committed at most once per root), so older manifests
-            # stay valid — time travel to any bucket boundary. An
-            # uncommitted (crashed) bucket's files are in no manifest and
-            # get replaced invisibly on re-run.
+            # manifest lists the parent's files plus bucket b's new
+            # partition dirs, and the buckets they hold. Earlier buckets'
+            # partition dirs are never rewritten (dynamic overwrite only
+            # touches url_bucket=b, and b is committed at most once per
+            # root), so older manifests stay valid — time travel to any
+            # bucket boundary. An uncommitted (crashed) bucket's files are
+            # in no manifest and get replaced invisibly on re-run.
             self.snapshots.commit(
                 self._table_files(),
                 "append-bucket",
@@ -393,54 +397,38 @@ class GraphWriter:
         return RunResult(run_id, self.url_buckets, processed, skipped, total_triples)
 
     def _table_files(self) -> list[str]:
-        """Current parquet file listing of every output table, relative to
-        root. Driver-side metadata IO, O(files written so far) — the flat
-        listing an Iceberg manifest-list would store incrementally."""
-        files = []
-        for table in self.TABLES:
-            tdir = os.path.join(self.root, table)
-            for dirpath, _, names in os.walk(tdir):
-                files.extend(
-                    os.path.relpath(os.path.join(dirpath, n), self.root)
-                    for n in names
-                    if n.endswith(".parquet")
-                )
-        return sorted(files)
+        """The file list the next commit publishes, relative to root: the
+        current manifest's files still on disk, plus the parquet files of
+        every partition directory that holds none of them — the
+        directories a write has just created or replaced. Files beside a
+        live one (pre-compaction copies a kept snapshot still lists, a
+        killed compaction's orphans) are never republished."""
+        sid = self.snapshots.current_id()
+        listed = set(self.snapshots.manifest(sid)["files"]) if sid is not None else set()
+        on_disk = {f for t in self.TABLES
+                   for f in list_parquet(os.path.join(self.root, t), self.root)}
+        live = listed & on_disk
+        live_dirs = {os.path.dirname(f) for f in live}
+        return sorted(live | {f for f in on_disk if os.path.dirname(f) not in live_dirs})
 
     def table_at(self, spark: SparkSession, table: str, snapshot_id: int | None = None) -> DataFrame:
-        """Time-travel read: a table AS OF a bucket-boundary snapshot
-        (default current). Explicit manifest file list + basePath keeps
-        the partition columns."""
+        """A table AS OF a bucket-boundary snapshot (default current): the
+        files its manifest lists, with the partition columns."""
         if table not in self.TABLES:
             raise ValueError(f"unknown table {table!r}; one of {self.TABLES}")
-        sid = snapshot_id if snapshot_id is not None else self.snapshots.current_id()
-        if sid is None:
-            raise ValueError(f"no snapshot committed yet at {self.root}")
-        prefix = table + os.sep
-        files = [
-            os.path.join(self.root, f)
-            for f in self.snapshots.manifest(sid)["files"]
-            if f.startswith(prefix)
-        ]
-        if not files:
-            raise ValueError(
-                f"snapshot {sid} lists no files for table {table!r} "
-                "(every committed bucket so far wrote zero rows to it)"
-            )
-        return spark.read.option(
-            "basePath", os.path.join(self.root, table)
-        ).parquet(*files)
+        return read_snapshot(spark, self.snapshots, self.root,
+                             os.path.join(self.root, table), snapshot_id)
 
     def edges(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(os.path.join(self.root, "edges"))
+        return self.table_at(spark, "edges")
 
     def triples(self, spark: SparkSession) -> DataFrame:
         """The materialized full triples relation (literals included) —
         read this instead of re-parsing the corpus downstream."""
-        return spark.read.parquet(os.path.join(self.root, "triples"))
+        return self.table_at(spark, "triples")
 
     def docmeta(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(os.path.join(self.root, "docmeta"))
+        return self.table_at(spark, "docmeta")
 
     def terms(self, spark: SparkSession) -> DataFrame:
         """The MATERIALIZED term-encoded (subj, pred, obj) relation for
@@ -450,15 +438,14 @@ class GraphWriter:
         ``pred_bucket`` partition column carries the bucket count as
         field metadata so the BGP compiler can add the matching
         partition filter for constant predicates (file-level pruning)."""
-        df = spark.read.parquet(os.path.join(self.root, "terms"))
-        return df.select(
+        return self.table_at(spark, "terms").select(
             "subj", "pred", "obj",
             F.col("pred_bucket").alias(
                 "pred_bucket", metadata={"pred_buckets": self.pred_buckets}),
         )
 
     def metrics(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(os.path.join(self.root, "metrics"))
+        return self.table_at(spark, "metrics")
 
     # -- maintenance (scheduled post-run, like Iceberg rewrite_data_files
     # + expire_snapshots) ---------------------------------------------------
@@ -479,7 +466,8 @@ class GraphWriter:
         files are renamed into the live partition dirs under names no
         manifest references yet, then ONE commit makes them visible —
         a crash at any point leaves either the old snapshot fully intact
-        (plus invisible orphans cleaned by the next compact/expire) or
+        (plus invisible orphans: no reader reads them, no later commit
+        lists them, and the next :meth:`expire_snapshots` deletes them) or
         the new one fully committed. Runs only after every bucket is
         checkpointed, so the dynamic-partition-overwrite bucket writes
         (which would clobber foreign files in a partition dir they
@@ -492,19 +480,15 @@ class GraphWriter:
                 f"{len(self.processed_buckets())}/{self.url_buckets} buckets done"
             )
         sid = self.snapshots.current_id()
-        if sid is None:
-            raise ValueError(f"no snapshot committed yet at {self.root}")
+        df = self.table_at(spark, table, sid)  # raises if sid lists no file of table
         parent_files = self.snapshots.manifest(sid)["files"]
         prefix = table + os.sep
         old = [f for f in parent_files if f.startswith(prefix)]
-        if not old:
-            raise ValueError(f"snapshot {sid} lists no files for {table!r}")
         # partition columns, recovered from the on-disk layout itself
         part_cols = []
         for seg in old[0].split(os.sep)[1:-1]:
             if "=" in seg:
                 part_cols.append(seg.split("=", 1)[0])
-        df = self.table_at(spark, table, sid)
 
         new_id = self.snapshots.next_id()
         tmp = os.path.join(self.root, f"_compact_tmp_{table}_{new_id}")
@@ -523,20 +507,12 @@ class GraphWriter:
 
         # rename into the live layout under manifest-invisible names
         new_files = []
-        for dirpath, _, names in os.walk(tmp):
-            rel_dir = os.path.relpath(dirpath, tmp)
-            for i, n in enumerate(sorted(names)):
-                if not n.endswith(".parquet"):
-                    continue
-                dest_dir = (
-                    os.path.join(self.root, table)
-                    if rel_dir == "." else
-                    os.path.join(self.root, table, rel_dir)
-                )
-                os.makedirs(dest_dir, exist_ok=True)
-                dest = os.path.join(dest_dir, f"compact-{new_id}-{n}")
-                os.replace(os.path.join(dirpath, n), dest)
-                new_files.append(os.path.relpath(dest, self.root))
+        for rel in list_parquet(tmp, tmp):
+            dest_dir = os.path.join(self.root, table, os.path.dirname(rel))
+            os.makedirs(dest_dir, exist_ok=True)
+            dest = os.path.join(dest_dir, f"compact-{new_id}-{os.path.basename(rel)}")
+            os.replace(os.path.join(tmp, rel), dest)
+            new_files.append(os.path.relpath(dest, self.root))
         shutil.rmtree(tmp, ignore_errors=True)
 
         files = [f for f in parent_files if not f.startswith(prefix)]
@@ -549,28 +525,9 @@ class GraphWriter:
         )
 
     def expire_snapshots(self, keep_last: int = 1) -> list[int]:
-        """Expire all but the last ``keep_last`` snapshots (metadata via
-        :meth:`ManifestLog.expire`) and physically delete every table
-        parquet file no surviving manifest references — the vacuum that
-        reclaims pre-compaction small files and keeps storage bounded.
-        Returns the expired snapshot ids."""
-        expired = self.snapshots.expire(keep_last)
-        surviving = {
-            f
-            for mid in self.snapshots.manifest_ids()
-            for f in self.snapshots.manifest(mid)["files"]
-        }
-        for table in self.TABLES:
-            tdir = os.path.join(self.root, table)
-            for dirpath, dirnames, names in os.walk(tdir, topdown=False):
-                for n in names:
-                    p = os.path.join(dirpath, n)
-                    if n.endswith(".parquet") and os.path.relpath(p, self.root) not in surviving:
-                        os.remove(p)
-                        # Spark's checksum sidecar; left behind, it keeps
-                        # the partition dir from ever emptying
-                        with contextlib.suppress(FileNotFoundError):
-                            os.remove(os.path.join(dirpath, f".{n}.crc"))
-                if dirpath != tdir and not os.listdir(dirpath):
-                    os.rmdir(dirpath)
-        return expired
+        """Expire all but the last ``keep_last`` snapshots and delete every
+        table file no surviving manifest lists — the vacuum that reclaims
+        pre-compaction small files and keeps storage bounded. Returns the
+        expired snapshot ids."""
+        tables = [os.path.join(self.root, t) for t in self.TABLES]
+        return expire_and_vacuum(self.snapshots, self.root, tables, keep_last)

@@ -18,8 +18,14 @@ manifest log with an atomically-swapped current-snapshot pointer:
   state;
 * readers load a snapshot's explicit file list (``basePath`` keeps
   partition columns intact), so time travel is just "read an older
-  manifest" and rollback is a NEW commit that re-publishes an old file
-  set — history is never rewritten.
+  manifest", a file no manifest lists is never read, and rollback is a
+  NEW commit that re-publishes an old file set — history is never
+  rewritten;
+* expiry vacuums every parquet file no surviving manifest lists.
+
+:func:`list_parquet`, :func:`read_snapshot` and :func:`expire_and_vacuum`
+are the one walk, read and vacuum that :class:`SnapshotTable` and
+``materialize.GraphWriter`` (one log over five table directories) share.
 
 Driver-side metadata IO is a handful of tiny JSON files per commit —
 the data path stays fully distributed. (At 10^12 documents the file
@@ -34,6 +40,7 @@ catalog CAS is the multi-writer upgrade path.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import re
@@ -107,9 +114,8 @@ class ManifestLog:
         ``keep_last`` reachable manifests plus any orphans older than
         the kept window, and re-root the oldest kept manifest
         (parent_id → None) so :meth:`history` never walks into a
-        deleted file. Callers that also own data files (GraphWriter
-        compaction, :class:`SnapshotTable`) pair this with their own
-        file reclamation. Returns the expired snapshot ids."""
+        deleted file. :func:`expire_and_vacuum` pairs it with the
+        data-file reclamation. Returns the expired snapshot ids."""
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
         hist = self.history()
@@ -155,6 +161,63 @@ class ManifestLog:
         return snap_id
 
 
+def list_parquet(top: str, root: str) -> list[str]:
+    """Every parquet file under ``top``, as sorted paths relative to ``root``."""
+    return sorted(
+        os.path.relpath(os.path.join(dirpath, n), root)
+        for dirpath, _, names in os.walk(top)
+        for n in names
+        if n.endswith(".parquet")
+    )
+
+
+def read_snapshot(spark: SparkSession, log: ManifestLog, root: str, base_path: str,
+                  snapshot_id: int | None = None) -> DataFrame:
+    """Read the files under ``base_path`` that a snapshot (default: the
+    current one) lists. The explicit file list makes old snapshots
+    readable after later commits and hides every file no manifest lists;
+    ``basePath`` keeps the partition-directory columns."""
+    sid = snapshot_id if snapshot_id is not None else log.current_id()
+    if sid is None:
+        raise ValueError(f"no committed snapshot at {root}")
+    prefix = os.path.relpath(base_path, root) + os.sep
+    files = [os.path.join(root, f) for f in log.manifest(sid)["files"]
+             if f.startswith(prefix)]
+    if not files:
+        raise ValueError(f"snapshot {sid} at {root} lists no files under {prefix}")
+    return spark.read.option("basePath", base_path).parquet(*files)
+
+
+def expire_and_vacuum(log: ManifestLog, root: str, data_dirs: list[str],
+                      keep_last: int) -> list[int]:
+    """Expire snapshots via :meth:`ManifestLog.expire`, then vacuum
+    ``data_dirs``: delete each parquet file no surviving manifest lists,
+    with its checksum sidecar, and each directory below a data dir that
+    no longer holds a listed file (the vacuum that keeps storage bounded
+    at scale). Returns the expired snapshot ids."""
+    expired = log.expire(keep_last)
+    listed = {f for sid in log.manifest_ids() for f in log.manifest(sid)["files"]}
+    live_dirs = set()
+    for f in listed:
+        d = os.path.dirname(f)
+        while d and d not in live_dirs:
+            live_dirs.add(d)
+            d = os.path.dirname(d)
+    for top in data_dirs:
+        for dirpath, dirnames, names in os.walk(top):
+            for d in list(dirnames):
+                if os.path.relpath(os.path.join(dirpath, d), root) not in live_dirs:
+                    shutil.rmtree(os.path.join(dirpath, d), ignore_errors=True)
+                    dirnames.remove(d)
+            for n in names:
+                p = os.path.join(dirpath, n)
+                if n.endswith(".parquet") and os.path.relpath(p, root) not in listed:
+                    os.remove(p)
+                    with contextlib.suppress(FileNotFoundError):
+                        os.remove(os.path.join(dirpath, f".{n}.crc"))
+    return expired
+
+
 class SnapshotTable:
     """One logical table backed by immutable parquet files + a ManifestLog."""
 
@@ -196,7 +259,7 @@ class SnapshotTable:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(out_dir)
-        files = self._list_parquet(out_dir)
+        files = list_parquet(out_dir, self.root)
         if mode == "append" and parent is not None:
             files = self.manifest(parent)["files"] + files
 
@@ -214,28 +277,10 @@ class SnapshotTable:
             old["files"], "rollback", {"to_snapshot_id": to_snapshot_id}
         )
 
-    def _list_parquet(self, out_dir: str) -> list[str]:
-        files = []
-        for dirpath, _, names in os.walk(out_dir):
-            for n in names:
-                if n.endswith(".parquet"):
-                    files.append(
-                        os.path.relpath(os.path.join(dirpath, n), self.root)
-                    )
-        return sorted(files)
-
     # -- reads ------------------------------------------------------------
     def read(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame:
-        """Read the table AS OF a snapshot (default: current). The explicit
-        file list makes old snapshots readable after later commits; the
-        basePath option preserves partition-directory columns."""
-        sid = snapshot_id if snapshot_id is not None else self.current_id()
-        if sid is None:
-            raise ValueError(f"no committed snapshot at {self.root}")
-        files = [os.path.join(self.root, f) for f in self.manifest(sid)["files"]]
-        if not files:
-            raise ValueError(f"snapshot {sid} at {self.root} lists no files")
-        return spark.read.option("basePath", self._data).parquet(*files)
+        """Read the table AS OF a snapshot (default: current)."""
+        return read_snapshot(spark, self.log, self.root, self._data, snapshot_id)
 
     # -- maintenance ------------------------------------------------------
     def compact(self, spark: SparkSession, target_files: int,
@@ -256,19 +301,6 @@ class SnapshotTable:
         )
 
     def expire_snapshots(self, keep_last: int = 1) -> list[int]:
-        """Expire snapshots via :meth:`ManifestLog.expire`, then delete
-        data directories no surviving manifest references (the vacuum
-        that keeps storage bounded at scale). Returns expired snapshot
-        ids."""
-        expired = self.log.expire(keep_last)
-        surviving_files = {
-            f for sid in self.log.manifest_ids() for f in self.manifest(sid)["files"]
-        }
-        live_dirs = {
-            f.split(os.sep)[1] for f in surviving_files
-            if f.startswith("data" + os.sep) and len(f.split(os.sep)) > 2
-        }
-        for d in os.listdir(self._data):
-            if d not in live_dirs:
-                shutil.rmtree(os.path.join(self._data, d), ignore_errors=True)
-        return expired
+        """Expire all but the last ``keep_last`` snapshots and vacuum the
+        data they alone referenced. Returns the expired snapshot ids."""
+        return expire_and_vacuum(self.log, self.root, [self._data], keep_last)

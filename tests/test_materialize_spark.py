@@ -1,6 +1,8 @@
 """Stage 4: edge/vertex materialization, per-partition lineage metrics,
 and kill-and-rerun checkpoint resume (BASELINE.md rows 7-9)."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -338,19 +340,90 @@ def test_kill_between_bucket_writes_and_commit_loses_nothing(spark, tmp_path, mo
     assert w.table_at(spark, "edges").count() == 16
 
 
-def test_foreign_commit_keeps_the_bucket_list(spark, tmp_path):
+def _commit_global_metrics(spark, w, run_id):
+    """Rewrite the corpus-global ``metrics/url_bucket=-1`` partition and
+    commit it outside the bucket loop, as ``scripts/run_pipeline.py``
+    does."""
+    (
+        partition_metrics(build_vertices(w.edges(spark)), "vertices", "iri", run_id)
+        .withColumn("url_bucket", F.lit(-1))
+        .write.mode("overwrite")
+        .partitionBy("url_bucket")
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(os.path.join(w.root, "metrics"))
+    )
+    return w.snapshots.commit(w._table_files(), "append-global-metrics", {"run_id": run_id})
+
+
+def _maintained_root(spark, root, keep_last):
+    """A completed run, a global-metrics commit, every table compacted,
+    then expiry down to ``keep_last`` snapshots."""
+    w = GraphWriter(str(root), url_buckets=4)
+    w.run(spark, pages_df(spark, _docs(16)), run_id="r1")
+    _commit_global_metrics(spark, w, "r1")
+    for table in GraphWriter.TABLES:
+        w.compact(spark, table)
+    w.expire_snapshots(keep_last=keep_last)
+    return w
+
+
+@pytest.mark.parametrize("keep_last", [1, 2])
+def test_foreign_commit_keeps_the_bucket_list(spark, tmp_path, keep_last):
     """A commit made outside the bucket loop (the pipeline's and the
     benchmark sweep's global-metrics commit, compaction) passes no bucket
     list and inherits its parent's, so a completed run stays complete
-    across it, across compaction and across expiry."""
-    pages = pages_df(spark, _docs(16))
-    w = GraphWriter(str(tmp_path / "gf"), url_buckets=4)
-    w.run(spark, pages, run_id="r1")
-    w.snapshots.commit(w._table_files(), "append-global-metrics", {"run_id": "r1"})
-    for table in GraphWriter.TABLES:
-        w.compact(spark, table)
-    w.expire_snapshots(keep_last=1)
+    across it, across compaction and across expiry. Every reader reads
+    the manifest: with two snapshots kept, the pre-compaction files the
+    older one lists stay on disk beside their compacted copies and must
+    not be read twice."""
+    w = _maintained_root(spark, tmp_path / "gf", keep_last)
     assert w.processed_buckets() == {0, 1, 2, 3}
-    res = w.run(spark, pages, run_id="r2")
+    for table in GraphWriter.TABLES:
+        assert getattr(w, table)(spark).count() == w.table_at(spark, table).count()
+    assert w.terms(spark).count() == 32 and w.edges(spark).count() == 16
+    res = w.run(spark, pages_df(spark, _docs(16)), run_id="r2")
     assert res.buckets_processed == 0 and res.buckets_skipped == 4
     assert w.table_at(spark, "triples").count() == 32
+
+
+def test_recommit_over_maintained_root_publishes_only_rewritten_files(spark, tmp_path):
+    """A pipeline re-run over a maintained root commits again: the new
+    manifest keeps the live files and adds only the partition directory
+    the re-run rewrote, never the pre-compaction files the kept older
+    snapshot still holds on disk."""
+    w = _maintained_root(spark, tmp_path / "gr", keep_last=2)
+    before = set(w.snapshots.manifest(w.snapshots.current_id())["files"])
+    after = set(w.snapshots.manifest(_commit_global_metrics(spark, w, "r2"))["files"])
+    assert {os.path.dirname(f) for f in after - before} == {
+        os.path.join("metrics", "url_bucket=-1")}
+    assert w.table_at(spark, "terms").count() == 32
+    assert w.table_at(spark, "triples").count() == 32
+
+
+def test_killed_compaction_leaves_only_invisible_orphans(spark, tmp_path, monkeypatch):
+    """A compaction killed after it moves its ``compact-*`` files into the
+    live partition directories and before its commit changes no read and
+    no later commit; after the next expiry no ``compact-*`` file, parquet
+    or checksum sidecar, is left."""
+    root = tmp_path / "gx"
+    w = GraphWriter(str(root), url_buckets=4)
+    w.run(spark, pages_df(spark, _docs(16)), run_id="r1")
+
+    def commit_killed(*args, **kwargs):
+        raise RuntimeError("killed before commit")
+
+    monkeypatch.setattr(w.snapshots, "commit", commit_killed)
+    with pytest.raises(RuntimeError, match="killed before commit"):
+        w.compact(spark, "edges")
+    monkeypatch.undo()
+
+    def compacted():
+        return [n for _, _, names in os.walk(root / "edges") for n in names
+                if "compact-" in n]
+
+    assert compacted()
+    assert w.edges(spark).count() == 16
+    assert not any("compact-" in f for f in w._table_files())
+    w.expire_snapshots(keep_last=1)
+    assert compacted() == []
+    assert w.edges(spark).count() == 16
